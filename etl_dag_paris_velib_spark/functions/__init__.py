@@ -1,4 +1,4 @@
-from .scalar import epoch_to_ts, surrogate_key, with_lineage
+from .scalar import lineage_exprs, with_lineage
 from .text import (
     bpe_token_count,
     doc_fingerprint,
@@ -15,8 +15,7 @@ from .udfs import make_chunk_udtf, make_minhash_sig_udf, simhash64_udf
 from .vector import cosine_similarity, dot, l2_norm
 
 __all__ = [
-    "epoch_to_ts",
-    "surrogate_key",
+    "lineage_exprs",
     "with_lineage",
     "bpe_token_count",
     "doc_fingerprint",

@@ -1,6 +1,6 @@
 """Scalar column helpers used by the ingestion pipelines.
 
-All are compositions of built-in ``pyspark.sql.functions`` — they stay inside
+All are compositions of built-in Spark SQL functions — they stay inside
 whole-stage codegen; no Python executes per row.
 """
 
@@ -10,12 +10,7 @@ from datetime import datetime
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def epoch_to_ts(col) -> Column:
-    """Epoch seconds → TimestampType (reference P3/P6: strftime per row at
-    etl_dag.py:94-96 and pd.to_datetime at etl_dag.py:240-242)."""
-    return F.timestamp_seconds(col)
+from pyspark.sql.types import TimestampType
 
 
 def ntz_epoch_us(colname: str) -> Column:
@@ -34,23 +29,30 @@ def ntz_epoch_us(colname: str) -> Column:
     )
 
 
-def surrogate_key(*cols) -> Column:
-    """Deterministic surrogate key ``a_b_...`` (reference notebook's intended
-    natural key station_id+'_'+last_reported, research.ipynb; SURVEY §1.5).
-    Replaces the reference's Postgres SERIAL (etl_dag.py:124,269), which has
-    no distributed equivalent — a value derived from the natural key is
-    stable under retries and partition-parallel writes, SERIAL is neither."""
-    return F.concat_ws("_", *[F.col(c).cast("string") if isinstance(c, str) else c.cast("string") for c in cols])
+def _sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal. Backslashes and quotes are
+    escaped, so any text round-trips exactly and none of it is parsed."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def lineage_exprs(run_ts: datetime, dag_id: str, task_id: str) -> tuple[str, ...]:
+    """Lineage columns the reference appends per row in pandas
+    (s3_to_postgres.py:63-69), as SQL expressions. Constants → Catalyst
+    folds them; the reference materialized a python list of N copies.
+
+    ``execution_date`` is the instant ``F.lit(run_ts)`` gives: PySpark's own
+    ``TimestampType`` conversion, so an aware ``run_ts`` keeps its offset
+    and a naive one reads as Python's local time.
+    """
+    return (
+        f"timestamp_micros({TimestampType().toInternal(run_ts)}) AS execution_date",
+        f"{_sql_string(dag_id)} AS dag_id",
+        f"{_sql_string(task_id)} AS task_id",
+    )
 
 
 def with_lineage(
     df: DataFrame, run_ts: datetime, dag_id: str, task_id: str
 ) -> DataFrame:
-    """Lineage columns the reference appends per row in pandas
-    (s3_to_postgres.py:63-69). ``lit()`` constants → Catalyst folds them;
-    the reference materialized a python list of N copies."""
-    return (
-        df.withColumn("execution_date", F.lit(run_ts).cast("timestamp"))
-        .withColumn("dag_id", F.lit(dag_id))
-        .withColumn("task_id", F.lit(task_id))
-    )
+    """``df`` with the :func:`lineage_exprs` columns appended."""
+    return df.selectExpr("*", *lineage_exprs(run_ts, dag_id, task_id))

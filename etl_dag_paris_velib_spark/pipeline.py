@@ -6,8 +6,14 @@ Reference shape (etl_dag.py:314-409): hourly DAG, two parallel TaskGroups
 XCom-pushed by the load (s3_to_postgres.py:85-92).
 
 Here each branch is fetch-to-bronze (driver-side seam, sources/fetcher.py)
-followed by one lazy plan from bronze scan to partitioned-parquet sink; the
-two branches run concurrently from the same SparkSession (the scheduler
+followed by one lazy plan from bronze scan to partitioned-parquet sink
+(:func:`branch_plan`). An hourly run writes about 1,475 rows, so the
+driver's cost of building that plan over py4j rivals executing it: each
+branch is built from SQL text — one projection for the flattened rows and
+their lineage, the ``observe`` metric, one projection for the partition
+columns — in a few dozen calls into the JVM, not one per ``Column`` node
+(``tools/ingest_roundtrips.py`` counts them). The two branches run
+concurrently from the same SparkSession (the scheduler
 interleaves their jobs — the reference needed Celery ``concurrency=2`` for
 this, etl_dag.py:320). The ``rows_inserted`` parity metric comes from
 ``df.observe`` — measured during the sink write itself, not a second
@@ -25,7 +31,7 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from datetime import datetime
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +58,16 @@ class BranchResult:
     elapsed_sec: float
 
 
+def branch_plan(
+    spark: SparkSession, name: str, bronze: str, run_ts: datetime, obs: Observation
+) -> DataFrame:
+    """The plan one branch writes: ingest the bronze file, count the rows
+    into ``obs`` as ``rows_inserted``, add the partition columns."""
+    df = BRANCH_INGEST[name](spark, bronze, run_ts)
+    df = df.observe(obs, F.expr("count(1) AS rows_inserted"))
+    return with_ingest_partitions(df)
+
+
 def run_branch(
     spark: SparkSession,
     name: str,
@@ -64,18 +80,14 @@ def run_branch(
 ) -> BranchResult:
     """One branch end-to-end with the reference's retry budget (3 x 5 min
     at etl_dag.py:331-332; the delay is a parameter here)."""
-    ingest = BRANCH_INGEST[name]
     last_err: Exception | None = None
     for attempt in range(1, retries + 2):
         t0 = time.perf_counter()
         try:
             bronze = fetcher.fetch_to_bronze(bronze_dir, name, run_ts)
-            df = ingest(spark, bronze, run_ts)
             obs = Observation(f"{name}_{run_ts.isoformat()}_{attempt}")
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows_inserted"))
-            df = with_ingest_partitions(df)
             out = os.path.join(out_dir, name)
-            write_partitioned_table(df, out)
+            write_partitioned_table(branch_plan(spark, name, bronze, run_ts, obs), out)
             return BranchResult(
                 name=name,
                 bronze_path=bronze,
@@ -102,7 +114,7 @@ def run_pipeline(
 ) -> dict[str, BranchResult]:
     """Fan-out both branches (reference ``start >> [a, b] >> end``,
     etl_dag.py:409) as concurrent jobs of one application."""
-    run_ts = run_ts or datetime.utcnow()
+    run_ts = run_ts or datetime.now(timezone.utc)
     with ThreadPoolExecutor(max_workers=len(fetchers)) as pool:
         futures = {
             name: pool.submit(

@@ -20,8 +20,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "etl-dag-paris-velib-spark",
@@ -31,11 +29,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the configured SparkSession.
 
-    ``master`` defaults to ``local[N]`` where N = SPARK_GRAFT_CPUS (32 here);
-    on a real cluster the caller passes the cluster master / lets
-    spark-submit set it and this function only applies SQL confs.
+    N is ``SPARK_GRAFT_CPUS``, read at each call, or ``os.cpu_count()``
+    when unset. ``master`` defaults to ``local[N]`` and
+    ``shuffle_partitions`` to N; on a real cluster the caller passes the
+    cluster master / lets spark-submit set it and this function only
+    applies SQL confs.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
@@ -43,9 +43,7 @@ def get_spark(
         builder = builder.master(f"local[{cpus}]")
 
     confs = {
-        "spark.sql.shuffle.partitions": str(
-            shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-        ),
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",

@@ -5,59 +5,71 @@ Reference pipeline: HTTP fetch → JSON to S3 → download → pd.json_normalize
 7-column projection → epoch→string timestamps → CSV to S3 → download →
 pandas → row-at-a-time Postgres inserts (five serialization hops, SURVEY §3.3).
 
-Here: ``read_json(envelope schema) → explode(data.stations) → project/cast →
-lineage columns`` — a single whole-stage-codegen pass from scan to sink. The
-HTTP fetch stays outside the engine behind a fetcher seam (SURVEY §7): the
-engine only ever sees files or DataFrames, so tests inject fixture JSON.
+Here: ``read_json(envelope schema) → explode(data.stations) → one
+projection`` — a single whole-stage-codegen pass from scan to sink. The
+projection (cast, bike-type fold, surrogate key and the lineage columns) is
+SQL text, :data:`STATION_EXPRS`, so the plan is built with a few dozen
+calls into the JVM instead of one per ``Column`` node: at 1,474 rows per run
+the driver's cost of building the plan rivals executing it. The HTTP fetch stays outside the engine behind
+a fetcher seam (SURVEY §7): the engine only ever sees files or DataFrames, so
+tests inject fixture JSON.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.scalar import surrogate_key, with_lineage
+from ..functions.scalar import lineage_exprs
 from ..schemas import VELIB_ENVELOPE_SCHEMA
 from .readers import read_json
 
-#: GBFS bike-type counts arrive as an array of single-key maps
-#: [{'mechanical': 1}, {'ebike': 0}] (research.ipynb; SURVEY §1.3). Normalize
-#: to scalar columns by folding the array of maps into one map then indexing.
-_BIKE_TYPES = ("mechanical", "ebike")
 
-
-def _bike_type_count(kind: str):
-    merged = F.aggregate(
-        F.col("s.num_bikes_available_types"),
-        F.create_map().cast("map<string,int>"),
-        lambda acc, m: F.map_concat(acc, m),
+def _bike_type_count(kind: str) -> str:
+    """GBFS bike-type counts arrive as an array of single-key maps
+    [{'mechanical': 1}, {'ebike': 0}] (research.ipynb; SURVEY §1.3). Fold the
+    array into one map (``map_concat``, so a repeated key follows
+    ``spark.sql.mapKeyDedupPolicy``), then index it; a missing kind reads 0."""
+    merged = (
+        "aggregate(s.num_bikes_available_types, cast(map() AS map<string,int>),"
+        " (acc, m) -> map_concat(acc, m))"
     )
-    return F.coalesce(merged[kind], F.lit(0))
+    return f"coalesce({merged}['{kind}'], 0) AS num_bikes_{kind}"
 
 
-def flatten_station_status(envelope: DataFrame) -> DataFrame:
-    """Envelope → one row per station with faithful types.
+#: One station row per exploded ``s``: equivalent of reference
+#: ``pd.json_normalize(raw["data"]["stations"])`` + projection + epoch
+#: conversion (etl_dag.py:225-242), with the columns the reference dropped
+#: (stationCode, bike-type split) retained per SURVEY §1.5.
+STATION_EXPRS = (
+    "s.station_id AS station_id",
+    "s.stationCode AS station_code",
+    "s.num_bikes_available AS num_bikes_available",
+    _bike_type_count("mechanical"),
+    _bike_type_count("ebike"),
+    "s.num_docks_available AS num_docks_available",
+    "s.is_installed AS is_installed",
+    "s.is_renting AS is_renting",
+    "s.is_returning AS is_returning",
+    "timestamp_seconds(s.last_reported) AS last_reported",
+    # surrogate key station_id_lastreported: the reference notebook's
+    # natural key (research.ipynb; SURVEY §1.5). It replaces the reference's
+    # Postgres SERIAL (etl_dag.py:269), which has no distributed equivalent —
+    # a value derived from the natural key is stable under retries and
+    # partition-parallel writes, SERIAL is neither.
+    "concat_ws('_', cast(s.station_id AS string), cast(s.last_reported AS string))"
+    " AS record_id",
+)
 
-    Equivalent of reference ``pd.json_normalize(raw["data"]["stations"])`` +
-    projection + epoch conversion (etl_dag.py:225-242), with the columns the
-    reference dropped (stationCode, bike-type split) retained per SURVEY §1.5.
-    """
-    return envelope.select(
-        F.explode("data.stations").alias("s"), F.col("lastUpdatedOther")
-    ).select(
-        F.col("s.station_id").alias("station_id"),
-        F.col("s.stationCode").alias("station_code"),
-        F.col("s.num_bikes_available").alias("num_bikes_available"),
-        _bike_type_count("mechanical").alias("num_bikes_mechanical"),
-        _bike_type_count("ebike").alias("num_bikes_ebike"),
-        F.col("s.num_docks_available").alias("num_docks_available"),
-        F.col("s.is_installed").alias("is_installed"),
-        F.col("s.is_renting").alias("is_renting"),
-        F.col("s.is_returning").alias("is_returning"),
-        F.timestamp_seconds("s.last_reported").alias("last_reported"),
-        surrogate_key("s.station_id", "s.last_reported").alias("record_id"),
+
+def flatten_station_status(envelope: DataFrame, extra: Iterable[str] = ()) -> DataFrame:
+    """Envelope → one row per station with faithful types, plus the ``extra``
+    SQL expressions in the same projection. Batch and streaming envelopes
+    alike."""
+    return envelope.selectExpr("explode(data.stations) AS s").selectExpr(
+        *STATION_EXPRS, *extra
     )
 
 
@@ -76,14 +88,17 @@ def ingest_station_status(
     """
     # one pretty-printed API envelope per poll file → multiline parse
     envelope = read_json(spark, json_path, VELIB_ENVELOPE_SCHEMA, multiline=True)
-    flat = flatten_station_status(envelope)
-    return with_lineage(flat, run_ts, dag_id, task_id)
+    return flatten_station_status(envelope, lineage_exprs(run_ts, dag_id, task_id))
 
 
 def with_ingest_partitions(df: DataFrame, ts_col: str = "execution_date") -> DataFrame:
-    """Add hive-style partition columns. The reference encodes run time in
-    S3 filenames under one flat prefix (etl_dag.py:185,192) — unprunable;
-    a dt/hour layout gives partition pruning on time predicates for free."""
-    return df.withColumn(
-        "ingest_date", F.date_format(ts_col, "yyyy-MM-dd")
-    ).withColumn("ingest_hour", F.date_format(ts_col, "HH"))
+    """Add hive-style partition columns in one projection. The reference
+    encodes run time in S3 filenames under one flat prefix
+    (etl_dag.py:185,192) — unprunable; a dt/hour layout gives partition
+    pruning on time predicates for free."""
+    ts = "`" + ts_col.replace("`", "``") + "`"
+    return df.selectExpr(
+        "*",
+        f"date_format({ts}, 'yyyy-MM-dd') AS ingest_date",
+        f"date_format({ts}, 'HH') AS ingest_hour",
+    )

@@ -4,35 +4,39 @@
 Reference transform extracts six scalars from ``current.*`` plus
 ``current.weather[0].description`` and a formatted epoch timestamp
 (etl_dag.py:84-99). Timestamps stay TimestampType end-to-end here; the
-reference's strftime-to-string happens only at CSV export.
+reference's strftime-to-string happens only at CSV export. Like the station
+branch, the projection is SQL text (:data:`WEATHER_EXPRS`) in a single
+``selectExpr``.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.scalar import with_lineage
+from ..functions.scalar import lineage_exprs
 from ..schemas import WEATHER_ENVELOPE_SCHEMA
 from .readers import read_json
 
+#: The one flat row (reference P1/P2/P3, SURVEY §2.3).
+WEATHER_EXPRS = (
+    "current.temp AS temp",
+    "current.feels_like AS feels_like",
+    "cast(current.pressure AS int) AS pressure",
+    "cast(current.humidity AS int) AS humidity",
+    "current.wind_speed AS wind_speed",
+    # reference: current["weather"][0]["description"] (etl_dag.py:93)
+    "element_at(current.weather, 1)['description'] AS weather_description",
+    "timestamp_seconds(current.dt) AS timestamp",
+)
 
-def flatten_weather(envelope: DataFrame) -> DataFrame:
-    """Envelope → one flat row (reference P1/P2/P3, SURVEY §2.3)."""
-    return envelope.select(
-        F.col("current.temp").alias("temp"),
-        F.col("current.feels_like").alias("feels_like"),
-        F.col("current.pressure").cast("int").alias("pressure"),
-        F.col("current.humidity").cast("int").alias("humidity"),
-        F.col("current.wind_speed").alias("wind_speed"),
-        # reference: current["weather"][0]["description"] (etl_dag.py:93)
-        F.element_at("current.weather", 1)["description"].alias(
-            "weather_description"
-        ),
-        F.timestamp_seconds("current.dt").alias("timestamp"),
-    )
+
+def flatten_weather(envelope: DataFrame, extra: Iterable[str] = ()) -> DataFrame:
+    """Envelope → one flat row, plus the ``extra`` SQL expressions in the
+    same projection."""
+    return envelope.selectExpr(*WEATHER_EXPRS, *extra)
 
 
 def ingest_weather(
@@ -44,4 +48,4 @@ def ingest_weather(
 ) -> DataFrame:
     # one pretty-printed API envelope per poll file → multiline parse
     envelope = read_json(spark, json_path, WEATHER_ENVELOPE_SCHEMA, multiline=True)
-    return with_lineage(flatten_weather(envelope), run_ts, dag_id, task_id)
+    return flatten_weather(envelope, lineage_exprs(run_ts, dag_id, task_id))

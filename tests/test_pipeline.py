@@ -5,7 +5,8 @@ re-runs via dynamic partition overwrite."""
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import datetime
+import time
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
@@ -100,3 +101,45 @@ def test_retry_budget_exhausted(spark, tmp_path, fixtures_dir):
             run_ts=RUN_TS,
             retries=2,
         )
+
+
+def test_aware_run_ts_partitions_by_utc_hour(spark, tmp_path, fixtures_dir):
+    """10:00+01:00 is 09:00 UTC: the run lands in ingest_hour=09 and its
+    execution_date is that instant, whatever the host's local zone."""
+    run_ts = datetime(2025, 2, 1, 10, 0, tzinfo=timezone(timedelta(hours=1)))
+    res = run_pipeline(
+        spark,
+        {"weather": FileFetcher(f"{fixtures_dir}/weather.json")},
+        bronze_dir=str(tmp_path / "bronze"),
+        out_dir=str(tmp_path / "gold"),
+        run_ts=run_ts,
+    )
+    row = spark.read.parquet(res["weather"].output_path).selectExpr(
+        "ingest_date", "ingest_hour", "unix_micros(execution_date) AS us"
+    ).collect()[0]
+    assert (str(row.ingest_date), row.ingest_hour) == ("2025-02-01", 9)
+    assert row.us == int(run_ts.timestamp()) * 1_000_000
+
+
+def test_default_run_ts_is_utc_off_utc_host(spark, tmp_path, fixtures_dir, monkeypatch):
+    """With no run_ts the run is stamped with the current UTC instant, not
+    the host's local wall clock read as UTC."""
+    monkeypatch.setenv("TZ", "Asia/Kolkata")  # UTC+05:30, no DST
+    time.tzset()
+    try:
+        before = datetime.now(timezone.utc)
+        res = run_pipeline(
+            spark,
+            {"weather": FileFetcher(f"{fixtures_dir}/weather.json")},
+            bronze_dir=str(tmp_path / "bronze"),
+            out_dir=str(tmp_path / "gold"),
+        )
+        after = datetime.now(timezone.utc)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    row = spark.read.parquet(res["weather"].output_path).selectExpr(
+        "ingest_hour", "unix_micros(execution_date) AS us"
+    ).collect()[0]
+    assert before.timestamp() * 1e6 <= row.us <= after.timestamp() * 1e6
+    assert row.ingest_hour in {before.hour, after.hour}

@@ -268,3 +268,31 @@ def test_unpartitioned_window_lint_catches_global_window(spark):
         ),
     )
     assert count_unpartitioned_windows(ok) == 0
+
+
+#: Most ``Project`` nodes each hourly ingest branch's analysed plan may
+#: hold. Station: the one above ``explode``, the flattened-rows-plus-lineage
+#: projection, the partition columns; weather: the last two. Each extra
+#: ``withColumn``/``select`` adds a node, a separate analysis and a burst of
+#: py4j round trips to every hourly run (a ``withColumn`` chain gives 7 and
+#: 6), which at ~1,475 rows per run costs more than the data.
+INGEST_PROJECT_BUDGET = {"station_status": 3, "weather": 2}
+
+
+@pytest.mark.parametrize("branch", sorted(INGEST_PROJECT_BUDGET))
+def test_ingest_branch_is_one_projection(spark, fixtures_dir, branch):
+    import os
+    import re
+    from datetime import datetime, timezone
+
+    from pyspark.sql import Observation
+
+    from etl_dag_paris_velib_spark.pipeline import branch_plan
+
+    bronze = os.path.join(fixtures_dir, f"{branch}.json")
+    run_ts = datetime(2025, 1, 31, 10, tzinfo=timezone.utc)
+    df = branch_plan(spark, branch, bronze, run_ts, Observation(f"lint_{branch}"))
+    plan = df._jdf.queryExecution().analyzed().toString()
+    projects = sum(bool(re.match(r"\W*Project \[", ln)) for ln in plan.splitlines())
+    assert "CollectMetrics" in plan
+    assert projects <= INGEST_PROJECT_BUDGET[branch], plan
