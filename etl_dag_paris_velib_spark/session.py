@@ -12,6 +12,9 @@ once for lazy, whole-stage-codegen execution:
   partition — the exactly-once semantics the reference lacks
   (reference retries double-insert; see s3_to_postgres.py:80-82 discussion in
   SURVEY.md §7).
+- PySpark's Column call-site capture off, so Column calls cost the same
+  few py4j round trips in every process, whichever thread builds the first
+  Column.
 """
 
 from __future__ import annotations
@@ -62,6 +65,13 @@ def get_spark(
         # as long nanos, which sources.tpch.load_table then converts.
         # Harmless no-op on 4.1, load-bearing on 3.x — keep for both.
         "spark.sql.legacy.parquet.nanosAsLong": "true",
+        # PySpark's call-site capture for Column errors costs each Column
+        # call about ten more py4j round trips and a Python stack walk.
+        # PySpark reads this conf once per process, at the first Column
+        # call, and treats a first call from a thread without an active
+        # session as "off" — so unset, whether it was on depended on which
+        # thread built a Column first. Off, explicitly, in every process.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     # NOTE: spark.driver.memory cannot be set after the JVM starts — it must
     # come from spark-submit / SPARK_DRIVER_MEMORY before launch; setting it

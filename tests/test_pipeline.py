@@ -143,3 +143,34 @@ def test_default_run_ts_is_utc_off_utc_host(spark, tmp_path, fixtures_dir, monke
     ).collect()[0]
     assert before.timestamp() * 1e6 <= row.us <= after.timestamp() * 1e6
     assert row.ingest_hour in {before.hour, after.hour}
+
+
+def test_column_calls_skip_call_site_capture(spark, monkeypatch):
+    """``get_spark`` turns PySpark's call-site capture off. On, it adds about
+    ten py4j round trips to every Column call, and PySpark decides it once
+    per process at the first Column call — off when that call comes from a
+    thread without an active session, such as a pipeline branch — so the
+    analyst's Column code cost more or less depending on which thread had
+    built a Column first."""
+    import threading
+
+    import pyspark.errors.utils as errutils
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    # decide afresh, from this thread, where the session is active
+    monkeypatch.setattr(errutils, "_enable_debugging_cache", None)
+    F.col("a").alias("b")
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = 0
+
+    def counting_send(*args, **kwargs):
+        nonlocal calls
+        calls += threading.current_thread() is threading.main_thread()
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting_send)
+    F.col("a").alias("b")
+    monkeypatch.undo()
+    assert calls <= 6, calls
