@@ -10,6 +10,8 @@ Layout
 - ``sources``    Batch readers + the two reference ingestion pipelines
                  (Vélib GBFS station_status, OpenWeatherMap one-call).
 - ``sinks``      Partitioned parquet table writes, CSV/JSON export, JDBC parity.
+- ``table_schema`` The ``_schema.json`` a written parquet table keeps, so
+                 reads skip Spark's schema-inference job.
 - ``functions``  Scalar/text/vector column helpers (all JVM-side built-ins
                  or Arrow-vectorized pandas UDFs; no row-at-a-time Python).
 - ``operators``  Dedup family, similarity search, as-of join, top-k,

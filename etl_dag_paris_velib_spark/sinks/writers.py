@@ -11,6 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..sources.readers import read_parquet
+from ..table_schema import SchemaUpkeep
+
 
 def write_partitioned_table(
     df: DataFrame,
@@ -25,7 +28,25 @@ def write_partitioned_table(
     the idempotency the reference approximates with ``replace=True`` on CSV
     uploads only (etl_dag.py:111) and entirely lacks on the DB insert.
     Replaces K4+K5: the table is created by the first write; no DDL step.
+
+    The table keeps its data schema in ``_schema.json`` at its root, which
+    lets :func:`..sources.readers.read_parquet` skip Spark's schema-inference
+    job (:mod:`..table_schema`). The write that creates the table creates
+    the file; a later write with the same data schema leaves it alone (one
+    small read, no write); one with another data schema deletes it, and
+    reads infer again. A table that held data before its first write here
+    never gets the file, and a write that writes nothing (``mode="ignore"``
+    on an existing path) does not touch it.
     """
+    upkeep = SchemaUpkeep(df.sparkSession, path, partition_cols, mode)
+    upkeep.before_write(df.schema)
+    _write_dynamic(df, path, partition_cols, mode)
+    upkeep.after_write()
+
+
+def _write_dynamic(
+    df: DataFrame, path: str, partition_cols: tuple[str, ...], mode: str
+) -> None:
     # per-write option rather than session conf: any externally-built
     # vanilla session gets dynamic (not table-wiping static) overwrite too
     df.write.option("partitionOverwriteMode", "dynamic").partitionBy(
@@ -78,16 +99,22 @@ def upsert_partitioned_table(
     (the self-overwrite trap). On a real deployment the ACID version of
     this operator is Delta/Iceberg ``MERGE INTO``; the dataflow (prune →
     anti-join → union → dynamic overwrite) is identical.
+
+    Whether the table exists is decided from the filesystem: a missing path,
+    or one with no data files, is no table and the batch is written alone.
+    Any error reading an existing table propagates — treating it as "no
+    table" would overwrite the touched partitions with the batch alone and
+    drop their other rows. ``existing`` is read through
+    :func:`..sources.readers.read_parquet`, and the ``_schema.json`` file
+    follows the same rules as in :func:`write_partitioned_table`, checked
+    against the schema of the merged rows.
     """
     spark = df.sparkSession
-    try:
-        existing = spark.read.parquet(path)
-        has_table = True
-    except Exception:
-        has_table = False
-    if has_table:
+    upkeep = SchemaUpkeep(spark, path, partition_cols)
+    if upkeep.had_table:
         from pyspark.sql.functions import broadcast
 
+        existing = read_parquet(spark, path)
         touched = df.select(*partition_cols).distinct()
         in_touched = existing.join(broadcast(touched), list(partition_cols), "left_semi")
         survivors = in_touched.join(
@@ -96,9 +123,9 @@ def upsert_partitioned_table(
         out = survivors.unionByName(df).localCheckpoint()
     else:
         out = df
-    out.write.option("partitionOverwriteMode", "dynamic").partitionBy(
-        *partition_cols
-    ).mode("overwrite").parquet(path)
+    upkeep.before_write(out.schema)
+    _write_dynamic(out, path, partition_cols, "overwrite")
+    upkeep.after_write()
 
 
 def append_jdbc(

@@ -3,15 +3,19 @@
 The reference downloads S3 objects to /tmp and reads them with pandas
 (s3_to_postgres.py:55-60); Spark reads object-store paths directly through
 the Hadoop connectors, so the "download" operator disappears — a path is a
-path (``s3a://...`` or local). All readers take an explicit schema: inferred
-schemas are a correctness hazard at scale (a single odd file reshapes the
-table) and inference itself is an extra full scan.
+path (``s3a://...`` or local). The JSON and CSV readers take an explicit
+schema: inferred schemas are a correctness hazard at scale (a single odd file
+reshapes the table) and inference itself is an extra full scan. The parquet
+reader uses the schema a table declares next to its data when it has one,
+and falls back to Spark's footer inference when it does not.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
+
+from ..table_schema import read_schema
 
 
 def read_json(
@@ -99,6 +103,15 @@ def read_csv(
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan. Schema comes from the file footer; column pruning and
-    predicate pushdown reach the row-group level automatically."""
-    return spark.read.parquet(path)
+    """Parquet scan; column pruning and predicate pushdown reach the
+    row-group level automatically.
+
+    The data schema is the one the table declares in its ``_schema.json``
+    (kept by :mod:`..sinks.writers`, see :mod:`..table_schema`), so Spark
+    runs no schema-inference job; partition columns and their types still
+    come from the directory names. A table without that file (not written
+    through this package, or whose data schema drifted) is read as
+    ``spark.read.parquet(path)``, with the schema inferred from a footer."""
+    schema = read_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 from datetime import datetime, timezone
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_dag_paris_velib_spark.sinks import write_partitioned_table
@@ -118,6 +119,44 @@ def test_upsert_partitioned_table(spark, tmp_path):
         if f.endswith(".parquet")
     )
     assert mtime_after == mtime_before  # untouched partition not rewritten
+
+
+def test_upsert_read_failure_propagates(spark, tmp_path, monkeypatch):
+    """A failing read of an existing table is an error, not "no table":
+    taking it for none would overwrite the touched partition with the batch
+    alone and drop the partition's other rows."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from etl_dag_paris_velib_spark.sinks.writers import upsert_partitioned_table
+
+    path = str(tmp_path / "gold")
+    base = spark.createDataFrame(
+        [(1, "a", "2025-01-01"), (2, "b", "2025-01-01")], ["id", "v", "ingest_date"]
+    )
+    upsert_partitioned_table(base, path, keys=("id",), partition_cols=("ingest_date",))
+    batch = spark.createDataFrame([(1, "a2", "2025-01-01")], ["id", "v", "ingest_date"])
+
+    def failing_parquet(self, *paths, **options):
+        raise IOError("injected read failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameReader, "parquet", failing_parquet)
+        with pytest.raises(IOError, match="injected"):
+            upsert_partitioned_table(batch, path, keys=("id",), partition_cols=("ingest_date",))
+    got = {(r.id, r.v) for r in spark.read.parquet(path).collect()}
+    assert got == {(1, "a"), (2, "b")}
+
+
+def test_upsert_into_directory_without_data_writes_batch(spark, tmp_path):
+    """A path that exists but holds no data files is no table."""
+    from etl_dag_paris_velib_spark.sinks.writers import upsert_partitioned_table
+
+    path = tmp_path / "gold"
+    path.mkdir()
+    (path / "_SUCCESS").write_text("")
+    batch = spark.createDataFrame([(1, "a", "2025-01-01")], ["id", "v", "ingest_date"])
+    upsert_partitioned_table(batch, str(path), keys=("id",), partition_cols=("ingest_date",))
+    assert {(r.id, r.v) for r in spark.read.parquet(str(path)).collect()} == {(1, "a")}
 
 
 def test_jdbc_append_round_trip(spark, tmp_path):
