@@ -5,24 +5,31 @@ Reference shape (etl_dag.py:314-409): hourly DAG, two parallel TaskGroups
 ``retries=3`` per task (etl_dag.py:331-332) and a ``rows_inserted`` metric
 XCom-pushed by the load (s3_to_postgres.py:85-92).
 
-Here each branch is fetch-to-bronze (driver-side seam, sources/fetcher.py)
-followed by one lazy plan from bronze scan to partitioned-parquet sink
-(:func:`branch_plan`). An hourly run writes about 1,475 rows, so the
-driver's cost of building that plan over py4j rivals executing it: each
-branch is built from SQL text — one projection for the flattened rows and
-their lineage, the ``observe`` metric, one projection for the partition
-columns — in a few dozen calls into the JVM, not one per ``Column`` node
-(``tools/ingest_roundtrips.py`` counts them). The two branches run
-concurrently from the same SparkSession (the scheduler
-interleaves their jobs — the reference needed Celery ``concurrency=2`` for
-this, etl_dag.py:320). The ``rows_inserted`` parity metric comes from
-``df.observe`` — measured during the sink write itself, not a second
-count() job over the data.
+Here each branch is fetch-to-bronze (driver-side seam, sources/fetcher.py),
+then ingest and a partitioned-parquet write. An hourly run writes about
+1,475 rows, and at that size Spark's fixed costs per plan (analysis, a
+codegen compile, a write job and its commit) are most of the run. So each
+branch first takes the driver path: :data:`BRANCH_INGEST` parses the bronze
+envelope on the driver into one Arrow table with the exact types and rows of
+the branch's Spark plan (:mod:`.sources.driver_ingest`), and
+:func:`write_partitioned_table` writes it with pyarrow into a hidden staging
+directory that then takes the partition's place — no Spark job. The driver
+path declines, before writing anything, any envelope outside the subset it
+converts exactly: a value without its declared JSON type, an int out of range,
+a duplicate key, ``NaN``, zero station rows, an empty ``weather`` array, a
+session time zone :mod:`zoneinfo` cannot resolve, and the other cases listed
+in :mod:`.sources.driver_ingest`. A declined branch runs :func:`branch_plan`,
+one lazy plan from bronze scan to partitioned-parquet sink, so Spark defines
+every such case, errors included; its ``rows_inserted`` comes from
+``df.observe``, measured during the sink write itself, not a second count()
+job. The two branches run concurrently from the same SparkSession (the
+reference needed Celery ``concurrency=2`` for this, etl_dag.py:320).
 
 Retry semantics: the reference's per-task retry can double-append on
 partial success (SURVEY §7); here a retry re-runs the branch's single
-write, and dynamic partition overwrite makes that write exactly-once per
-(run, partition) — retries are safe by construction.
+write, and both writers replace the run's partition (the driver path by a
+rename-aside swap, Spark by dynamic partition overwrite), so each write is
+exactly-once per (run, partition) — retries are safe by construction.
 """
 
 from __future__ import annotations
@@ -37,12 +44,22 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .sinks.writers import write_partitioned_table
+from .sources.driver_ingest import station_status_batch, weather_batch
 from .sources.fetcher import Fetcher
 from .sources.velib import ingest_station_status, with_ingest_partitions
 from .sources.weather import ingest_weather
 
-#: The two reference branches: name -> ingestion entry point.
+#: The two reference branches: name -> driver-side ingestion, which returns
+#: the branch's rows as a ``DriverBatch``, or None when it declines the
+#: envelope.
 BRANCH_INGEST = {
+    "weather": weather_batch,
+    "station_status": station_status_batch,
+}
+
+#: name -> the Spark plan of the branch's flattened rows, for envelopes the
+#: driver path declines and for the tools that inspect the plan.
+SPARK_INGEST = {
     "weather": ingest_weather,
     "station_status": ingest_station_status,
 }
@@ -63,7 +80,7 @@ def branch_plan(
 ) -> DataFrame:
     """The plan one branch writes: ingest the bronze file, count the rows
     into ``obs`` as ``rows_inserted``, add the partition columns."""
-    df = BRANCH_INGEST[name](spark, bronze, run_ts)
+    df = SPARK_INGEST[name](spark, bronze, run_ts)
     df = df.observe(obs, F.expr("count(1) AS rows_inserted"))
     return with_ingest_partitions(df)
 
@@ -79,20 +96,27 @@ def run_branch(
     retry_delay_sec: float = 0.0,
 ) -> BranchResult:
     """One branch end-to-end with the reference's retry budget (3 x 5 min
-    at etl_dag.py:331-332; the delay is a parameter here)."""
+    at etl_dag.py:331-332; the delay is a parameter here): the driver path,
+    or :func:`branch_plan` when the driver path declines the envelope."""
     last_err: Exception | None = None
     for attempt in range(1, retries + 2):
         t0 = time.perf_counter()
         try:
             bronze = fetcher.fetch_to_bronze(bronze_dir, name, run_ts)
-            obs = Observation(f"{name}_{run_ts.isoformat()}_{attempt}")
             out = os.path.join(out_dir, name)
-            write_partitioned_table(branch_plan(spark, name, bronze, run_ts, obs), out)
+            batch = BRANCH_INGEST[name](spark, bronze, run_ts)
+            if batch is not None:
+                write_partitioned_table(batch, out)
+                rows = batch.rows
+            else:
+                obs = Observation(f"{name}_{run_ts.isoformat()}_{attempt}")
+                write_partitioned_table(branch_plan(spark, name, bronze, run_ts, obs), out)
+                rows = obs.get["rows_inserted"]
             return BranchResult(
                 name=name,
                 bronze_path=bronze,
                 output_path=out,
-                rows_inserted=obs.get["rows_inserted"],
+                rows_inserted=rows,
                 attempts=attempt,
                 elapsed_sec=round(time.perf_counter() - t0, 3),
             )

@@ -11,12 +11,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..sources.driver_ingest import DriverBatch
 from ..sources.readers import read_parquet
 from ..table_schema import SchemaUpkeep
+from .staged import swap_partition, write_driver_batch
 
 
 def write_partitioned_table(
-    df: DataFrame,
+    df: DataFrame | DriverBatch,
     path: str,
     partition_cols: tuple[str, ...] = ("ingest_date", "ingest_hour"),
     mode: str = "overwrite",
@@ -37,7 +39,14 @@ def write_partitioned_table(
     reads infer again. A table that held data before its first write here
     never gets the file, and a write that writes nothing (``mode="ignore"``
     on an existing path) does not touch it.
+
+    A :class:`..sources.driver_ingest.DriverBatch` (one partition's rows,
+    built on the driver) is written with pyarrow and no Spark job, by the
+    same rules (:func:`.staged.write_driver_batch`).
     """
+    if isinstance(df, DriverBatch):
+        write_driver_batch(df, path, partition_cols, mode)
+        return
     upkeep = SchemaUpkeep(df.sparkSession, path, partition_cols, mode)
     upkeep.before_write(df.schema)
     _write_dynamic(df, path, partition_cols, mode)
@@ -175,10 +184,12 @@ def compact_partitions(
        files (``repartition(n_out)`` scoped to the partition's rows) into
        a HIDDEN staging dir under the table root (dot-prefixed — Spark's
        file index ignores it, so concurrent readers never see partials),
-    4. staged partition dirs replace the originals by a rename-aside swap
-       (live → trash, staged → live, delete trash) — a crash mid-swap
-       never leaves a partition absent with no recoverable copy, and
-       Spark is never overwriting a path it is lazily reading.
+    4. staged partition dirs replace the originals by the rename-aside
+       swap of :func:`.staged.swap_partition` (live → trash, staged →
+       live, delete trash; a failed move puts the original back) — a
+       crash mid-swap never leaves a partition absent with no recoverable
+       copy, and Spark is never overwriting a path it is lazily reading.
+       The staging directory is deleted whether the swap succeeds or not.
 
     Layout validation (data-loss guard): every data file must sit at
     EXACTLY ``len(partition_cols)`` directory levels below the table
@@ -203,9 +214,9 @@ def compact_partitions(
     import math
     import uuid
 
-    jvm = spark._jvm
+    path_class = spark._jvm.org.apache.hadoop.fs.Path
     hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
+    root = path_class(path)
     fs = root.getFileSystem(hconf)
     qroot = fs.makeQualified(root).toString()
 
@@ -242,28 +253,21 @@ def compact_partitions(
 
     token = uuid.uuid4().hex[:12]
     staging = f"{path}/.compact-{token}"
-    trash = f"{path}/.compact-trash-{token}"
     report: dict[str, tuple[int, int, int]] = {}
-    for d, (b, n_before, n_out) in plan.items():
-        part_df = spark.read.parquet(f"{path}/{d}")
-        part_df.repartition(n_out).write.mode("overwrite").parquet(
-            f"{staging}/{d}"
-        )
-        report[d] = (b, n_before, n_out)
-    for d in plan:
-        assert d, "empty partition key must be impossible post-validation"
-        live = jvm.org.apache.hadoop.fs.Path(f"{path}/{d}")
-        staged = jvm.org.apache.hadoop.fs.Path(f"{staging}/{d}")
-        aside = jvm.org.apache.hadoop.fs.Path(f"{trash}/{d}")
-        fs.mkdirs(aside.getParent())
-        if not fs.rename(live, aside):
-            raise IOError(f"compaction rename-aside failed for partition {d}")
-        if not fs.rename(staged, live):
-            # restore the original so the partition is never left absent
-            fs.rename(aside, live)
-            raise IOError(f"compaction swap failed for partition {d}")
-        # drop the per-partition _SUCCESS marker the staged write left
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{d}/_SUCCESS"), False)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(trash), True)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    try:
+        for d, (b, n_before, n_out) in plan.items():
+            part_df = spark.read.parquet(f"{path}/{d}")
+            part_df.repartition(n_out).write.mode("overwrite").parquet(
+                f"{staging}/{d}"
+            )
+            # the per-partition _SUCCESS marker of the staged write
+            fs.delete(path_class(f"{staging}/{d}/_SUCCESS"), False)
+            report[d] = (b, n_before, n_out)
+        for i, d in enumerate(plan):
+            assert d, "empty partition key must be impossible post-validation"
+            swap_partition(
+                fs, path_class, f"{path}/{d}", f"{staging}/{d}", f"{staging}-trash-{i}"
+            )
+    finally:
+        fs.delete(path_class(staging), True)
     return report

@@ -1,13 +1,23 @@
-"""Driver overhead of building each hourly ingest branch's plan.
+"""Driver-side cost of each hourly ingest branch, on both of its paths.
 
-For each branch of ``pipeline.BRANCH_INGEST`` this builds, from the test
-fixtures and without executing it, the plan ``pipeline.run_branch`` writes
-(``pipeline.branch_plan``: ingest, ``observe``, partition columns). It prints
-one JSON line per branch: the py4j round trips (Python-to-JVM calls) one
-build makes, its median wall time, and the ``Project`` nodes of the analysed
-plan. The first build of each branch is a warm-up and is not counted.
+For each branch of ``pipeline.BRANCH_INGEST`` this prints two JSON lines,
+from the test fixtures (``--station-rows N`` repeats the fixture's stations
+up to N rows, with distinct ids, to match an hourly poll of 1,474):
 
-Usage: python tools/ingest_roundtrips.py [--reps N]
+- ``"path": "driver"``, the path ``pipeline.run_branch`` takes: the median
+  wall time of the ingest (parse and convert, ``BRANCH_INGEST[name]``) and
+  of the write (``write_partitioned_table`` of the batch, one new hourly
+  partition per rep), and the py4j round trips (Python-to-JVM calls) each
+  makes. Most of a write's time on a local table is the Hadoop local
+  filesystem forking ``chmod`` for each file and directory it creates.
+- ``"path": "spark_plan"``, the plan a declined envelope runs
+  (``pipeline.branch_plan``: ingest, ``observe``, partition columns), built
+  without executing it: round trips, median build time and the ``Project``
+  nodes of the analysed plan.
+
+The first rep of each measurement is a warm-up and is not counted.
+
+Usage: python tools/ingest_roundtrips.py [--reps N] [--station-rows N]
 """
 
 from __future__ import annotations
@@ -18,8 +28,9 @@ import os
 import re
 import statistics
 import sys
+import tempfile
 import time
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -33,9 +44,24 @@ def project_count(df) -> int:
     return sum(bool(re.match(r"\W*Project \[", line)) for line in plan.splitlines())
 
 
+def station_file(directory: str, n: int) -> str:
+    """The station fixture with its stations repeated up to ``n`` rows."""
+    with open(os.path.join(FIXTURES, "station_status.json")) as f:
+        env = json.load(f)
+    base = env["data"]["stations"]
+    env["data"]["stations"] = [
+        {**base[i % len(base)], "station_id": 10_000 + i} for i in range(n)
+    ]
+    path = os.path.join(directory, "station_status.json")
+    with open(path, "w") as f:
+        json.dump(env, f)
+    return path
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--reps", type=int, default=20)
+    ap.add_argument("--station-rows", type=int, default=1474)
     args = ap.parse_args()
 
     from pyspark.sql import Observation
@@ -54,31 +80,72 @@ def main() -> None:
         calls += 1
         return send(*a, **k)
 
+    def measured(fn):
+        """``fn()``, its wall time and its round trips."""
+        nonlocal calls
+        calls, t0 = 0, time.perf_counter()
+        out = fn()
+        return out, time.perf_counter() - t0, calls
+
+    def ms_p50(xs) -> float:
+        return round(statistics.median(xs) * 1e3, 1)
+
     client.send_command = counting_send
     run_ts = datetime(2025, 1, 31, 10, tzinfo=timezone.utc)
     try:
-        for name in pipeline.BRANCH_INGEST:
-            bronze = os.path.join(FIXTURES, f"{name}.json")
-            trips, secs = [], []
-            for i in range(args.reps + 1):
-                obs = Observation(f"{name}_{i}")
-                calls, t0 = 0, time.perf_counter()
-                df = pipeline.branch_plan(spark, name, bronze, run_ts, obs)
-                if i:
-                    secs.append(time.perf_counter() - t0)
-                    trips.append(calls)
-            print(
-                json.dumps(
-                    {
-                        "branch": name,
-                        "round_trips_min": min(trips),
-                        "round_trips_max": max(trips),
-                        "build_ms_p50": round(statistics.median(secs) * 1e3, 1),
-                        "projects": project_count(df),
-                    }
-                ),
-                flush=True,
-            )
+        with tempfile.TemporaryDirectory(prefix="ingest_roundtrips-") as work:
+            bronze = {
+                "station_status": station_file(work, args.station_rows),
+                "weather": os.path.join(FIXTURES, "weather.json"),
+            }
+            for name in pipeline.BRANCH_INGEST:
+                ingest, write = [], []
+                for i in range(args.reps + 1):
+                    ts = run_ts + timedelta(hours=i)
+                    batch, secs, trips = measured(
+                        lambda: pipeline.BRANCH_INGEST[name](spark, bronze[name], ts)
+                    )
+                    ingest.append((secs, trips))
+                    out = os.path.join(work, "gold", name)
+                    write.append(measured(lambda: pipeline.write_partitioned_table(batch, out))[1:])
+                ingest, write = ingest[1:], write[1:]
+                print(
+                    json.dumps(
+                        {
+                            "branch": name,
+                            "path": "driver",
+                            "rows": batch.rows,
+                            "ingest_ms_p50": ms_p50(s for s, _ in ingest),
+                            "ingest_round_trips_max": max(n for _, n in ingest),
+                            "write_ms_p50": ms_p50(s for s, _ in write),
+                            "write_round_trips_min": min(n for _, n in write),
+                            "write_round_trips_max": max(n for _, n in write),
+                        }
+                    ),
+                    flush=True,
+                )
+
+                builds = []
+                for i in range(args.reps + 1):
+                    obs = Observation(f"{name}_{i}")
+                    df, secs, trips = measured(
+                        lambda: pipeline.branch_plan(spark, name, bronze[name], run_ts, obs)
+                    )
+                    builds.append((secs, trips))
+                builds = builds[1:]
+                print(
+                    json.dumps(
+                        {
+                            "branch": name,
+                            "path": "spark_plan",
+                            "round_trips_min": min(n for _, n in builds),
+                            "round_trips_max": max(n for _, n in builds),
+                            "build_ms_p50": ms_p50(s for s, _ in builds),
+                            "projects": project_count(df),
+                        }
+                    ),
+                    flush=True,
+                )
     finally:
         client.send_command = send
         spark.stop()
