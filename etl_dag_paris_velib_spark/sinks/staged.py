@@ -11,12 +11,10 @@ during the swap can see the partition briefly absent.
 
 from __future__ import annotations
 
-import functools
 import json
 import uuid
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql.types import StructType
 
 from ..sources.driver_ingest import DriverBatch
@@ -49,15 +47,12 @@ def swap_partition(fs, path_class, live: str, staged: str, trash: str) -> None:
         fs.delete(aside, True)
 
 
-@functools.lru_cache(maxsize=None)
-def _spark_version(sc) -> str:
-    return sc.version
-
-
 def _parquet_bytes(data: pa.Table, schema: StructType, version: str) -> bytes:
     """``data`` as one parquet file with the physical layout Spark writes:
     INT96 timestamps, snappy, and Spark's schema in the footer. pyarrow
     writes its own ``ARROW:schema`` key beside Spark's; Spark ignores it."""
+    import pyarrow.parquet as pq  # only processes that write a driver batch load it
+
     # the field order Spark's own JSON rendering uses, not PySpark's sorted one
     row_metadata = json.dumps(schema.jsonValue(), separators=(",", ":"))
     data = data.replace_schema_metadata(
@@ -96,7 +91,7 @@ def write_driver_batch(
     payload = _parquet_bytes(
         table.drop_columns(list(partition_cols)),
         StructType(data_fields),
-        _spark_version(batch.spark.sparkContext),
+        batch.spark.sparkContext.version,
     )
 
     upkeep = SchemaUpkeep(batch.spark, path, partition_cols, mode)

@@ -75,6 +75,7 @@ from ..schemas import (
     WEATHER_ENVELOPE_SCHEMA,
     WEATHER_SCHEMA,
 )
+from ..table_schema import read_bytes
 
 PARTITION_COLS = ("ingest_date", "ingest_hour")
 
@@ -160,12 +161,7 @@ def _read_text(spark: SparkSession, path: str) -> str:
                 data = f.read()
         else:
             jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            stream = fs.open(jpath)
-            try:
-                data = bytes(stream.readAllBytes())
-            finally:
-                stream.close()
+            data = read_bytes(jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath)
         return data.decode("utf-8")
     except (OSError, UnicodeDecodeError) as err:
         raise _Declined("unreadable file") from err

@@ -82,6 +82,15 @@ def _data_schema_json(schema: StructType, partition_cols: tuple[str, ...]) -> st
     return json.dumps(_relaxed({"type": "struct", "fields": fields}), sort_keys=True)
 
 
+def read_bytes(fs, path) -> bytes:
+    """The whole file at the Hadoop ``path`` on the FileSystem ``fs``."""
+    stream = fs.open(path)
+    try:
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+
+
 @functools.lru_cache(maxsize=None)
 def _path_class(jvm):
     """Hadoop's ``Path`` class; resolving it costs five JVM round trips."""
@@ -104,11 +113,7 @@ class _Table:
         """The schema file's text, or None when there is none."""
         if not self.fs.exists(self.file):
             return None
-        stream = self.fs.open(self.file)
-        try:
-            return bytes(stream.readAllBytes()).decode("utf-8")
-        finally:
-            stream.close()
+        return read_bytes(self.fs, self.file).decode("utf-8")
 
     def has_data(self) -> bool:
         """Whether the root holds a file Spark reads as table data; stops at

@@ -172,6 +172,14 @@ def test_fixtures_match_spark_path(spark, tmp_path, fixtures_dir):
     assert got["weather"].rows_inserted == 1
 
 
+def test_uri_bronze_path_reads_through_hadoop(spark, fixtures_dir):
+    for name in BRANCHES:
+        path = os.path.join(fixtures_dir, f"{name}.json")
+        local = pipeline.BRANCH_INGEST[name](spark, path, RUN_TS)
+        uri = pipeline.BRANCH_INGEST[name](spark, f"file://{path}", RUN_TS)
+        assert uri is not None and uri.table.equals(local.table), name
+
+
 def test_footer_has_spark_physical_layout(spark, tmp_path, fixtures_dir):
     files = {name: os.path.join(fixtures_dir, f"{name}.json") for name in BRANCHES}
     run_both(spark, tmp_path, files)

@@ -1,8 +1,8 @@
 """Driver-side cost of each hourly ingest branch, on both of its paths.
 
 For each branch of ``pipeline.BRANCH_INGEST`` this prints two JSON lines,
-from the test fixtures (``--station-rows N`` repeats the fixture's stations
-up to N rows, with distinct ids, to match an hourly poll of 1,474):
+from one seeded hour of ``perfbench/feed.py`` (1,474 station rows, one
+weather row):
 
 - ``"path": "driver"``, the path ``pipeline.run_branch`` takes: the median
   wall time of the ingest (parse and convert, ``BRANCH_INGEST[name]``) and
@@ -17,12 +17,13 @@ up to N rows, with distinct ids, to match an hourly poll of 1,474):
 
 The first rep of each measurement is a warm-up and is not counted.
 
-Usage: python tools/ingest_roundtrips.py [--reps N] [--station-rows N]
+Usage: python tools/ingest_roundtrips.py [--reps N]
 """
 
 from __future__ import annotations
 
 import argparse
+import importlib.util
 import json
 import os
 import re
@@ -35,8 +36,6 @@ from datetime import datetime, timedelta, timezone
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-FIXTURES = os.path.join(ROOT, "tests", "fixtures")
-
 
 def project_count(df) -> int:
     """``Project`` nodes in the analysed plan of ``df``."""
@@ -44,24 +43,20 @@ def project_count(df) -> int:
     return sum(bool(re.match(r"\W*Project \[", line)) for line in plan.splitlines())
 
 
-def station_file(directory: str, n: int) -> str:
-    """The station fixture with its stations repeated up to ``n`` rows."""
-    with open(os.path.join(FIXTURES, "station_status.json")) as f:
-        env = json.load(f)
-    base = env["data"]["stations"]
-    env["data"]["stations"] = [
-        {**base[i % len(base)], "station_id": 10_000 + i} for i in range(n)
-    ]
-    path = os.path.join(directory, "station_status.json")
-    with open(path, "w") as f:
-        json.dump(env, f)
-    return path
+def feed_hour(directory: str):
+    """One seeded hour of the benchmark's feed, its envelopes under
+    ``directory``."""
+    path = os.path.join(ROOT, "perfbench", "feed.py")
+    spec = importlib.util.spec_from_file_location("perfbench_feed", path)
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = mod  # dataclasses look their module up
+    spec.loader.exec_module(mod)
+    return mod.Feed(directory, 101).next_hour()
 
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--reps", type=int, default=20)
-    ap.add_argument("--station-rows", type=int, default=1474)
     args = ap.parse_args()
 
     from pyspark.sql import Observation
@@ -91,13 +86,11 @@ def main() -> None:
         return round(statistics.median(xs) * 1e3, 1)
 
     client.send_command = counting_send
-    run_ts = datetime(2025, 1, 31, 10, tzinfo=timezone.utc)
     try:
         with tempfile.TemporaryDirectory(prefix="ingest_roundtrips-") as work:
-            bronze = {
-                "station_status": station_file(work, args.station_rows),
-                "weather": os.path.join(FIXTURES, "weather.json"),
-            }
+            hour = feed_hour(os.path.join(work, "bronze"))
+            bronze = {"station_status": hour.station_path, "weather": hour.weather_path}
+            run_ts = datetime.fromtimestamp(hour.run_ts, timezone.utc)
             for name in pipeline.BRANCH_INGEST:
                 ingest, write = [], []
                 for i in range(args.reps + 1):
