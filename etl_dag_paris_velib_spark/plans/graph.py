@@ -817,34 +817,32 @@ def bfs_hops(
     distance frame guarantees first-reach-wins, which for BFS IS the
     minimum distance, so no min-aggregation is needed afterwards. The
     per-round empty check is a bounded take(1) (same O(1)-driver-data
-    family as pagerank's delta collect); rounds are <= max_hops so the
-    unrolled lineage stays shallow and needs no checkpoint. Distance
-    state is one int per reached node. Persisted intermediates go
-    through the bounded ``_GRAPH_PERSISTS`` tracker.
+    family as pagerank's delta collect). Distance state is one int per
+    reached node. Each round's frontier and distance frame is a local
+    checkpoint, so a round's plan holds no earlier round: cached frames
+    would nest every earlier round's cached plan, and q122's plan text
+    grew to about 97 MB at sf0.01, which AQE rebuilds on each stage update
+    and which ran a 1 GB driver out of heap. Checkpoint blocks are freed
+    when their frames are garbage collected; the edge list goes through
+    the bounded ``_GRAPH_PERSISTS`` tracker.
     """
     e = _track_graph_persist(
         edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
     )
-    dist = _track_graph_persist(
-        seed.select("v", F.lit(0).cast("int").alias("hops")).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    dist = seed.select("v", F.lit(0).cast("int").alias("hops")).localCheckpoint()
     frontier = dist.select("v")
     for h in range(1, max_hops + 1):
-        nxt = _track_graph_persist(
+        nxt = (
             frontier.join(e, frontier["v"] == e["src"])
             .select(F.col("dst").alias("v"))
             .distinct()
             .join(dist, "v", "left_anti")
             .select("v", F.lit(h).cast("int").alias("hops"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .localCheckpoint()
         )
         if not nxt.take(1):
             break
-        dist = _track_graph_persist(
-            dist.unionByName(nxt).persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        dist = dist.unionByName(nxt).localCheckpoint()
         frontier = nxt.select("v")
     return dist
 
