@@ -12,6 +12,9 @@ Layout
 - ``sinks``      Partitioned parquet table writes, CSV/JSON export, JDBC parity.
 - ``table_schema`` The ``_schema.json`` a written parquet table keeps, so
                  reads skip Spark's schema-inference job.
+- ``tablefs``    The driver's file operations on table and bronze files:
+                 Python file I/O for a path without a scheme, the Hadoop
+                 FileSystem API for any other.
 - ``functions``  Scalar/text/vector column helpers (all JVM-side built-ins
                  or Arrow-vectorized pandas UDFs; no row-at-a-time Python).
 - ``operators``  Dedup family, similarity search, as-of join, top-k,

@@ -1883,8 +1883,7 @@ def graph_beam_search_sweep(
     chained stages to hops (r12: 12 persisted frontiers → 4, one
     adjacency join per hop instead of three; measured same-session
     q164 10.5s → 6.3s, q162 16.8s → 13.4s — q162's residual is the
-    one-time GEMM index build, not the search; plan diff in
-    plans/r12/).
+    one-time GEMM index build, not the search).
     """
     spark = queries.sparkSession
     adjacency = track_persist(_persist_udf_cache(adjacency))

@@ -1,11 +1,14 @@
-"""Staged partition writes on the Hadoop FileSystem: the rename-aside swap
-that puts a staged directory in place of a partition, and the driver-side
-parquet write of a :class:`..sources.driver_ingest.DriverBatch`.
+"""Staged partition writes: the rename-aside swap that puts a staged
+directory in place of a partition, and the driver-side parquet write of a
+:class:`..sources.driver_ingest.DriverBatch`.
 
 Staging directories are hidden (dot-prefixed) under the table root, so
-Spark's file index never reads a partial write. All file access goes through
-the Hadoop FileSystem API, so ``s3a://`` tables work the same as local ones;
-on an object store a rename is a copy and a delete, so a reader listing
+Spark's file index never reads a partial write. File access goes through
+:mod:`..tablefs`: plain Python file I/O for a path without a scheme, so a
+driver batch written to a local table costs one py4j round trip (the Spark
+version for the footer) and forks no process, and the Hadoop FileSystem API
+for any other path (``file://``, ``s3a://``), so those tables work the same.
+On an object store a rename is a copy and a delete, so a reader listing
 during the swap can see the partition briefly absent.
 """
 
@@ -21,27 +24,27 @@ from ..sources.driver_ingest import DriverBatch
 from ..table_schema import SchemaUpkeep
 
 
-def swap_partition(fs, path_class, live: str, staged: str, trash: str) -> None:
+def swap_partition(fs, live: str, staged: str, trash: str) -> None:
     """Make the directory ``staged`` the partition directory ``live`` by a
-    rename-aside swap: live → ``trash``, staged → live, delete trash. A
-    missing ``live`` is simply created. If staged cannot be moved in, the old
-    partition is put back and the error raised, so the partition keeps its
-    old rows; the caller deletes its staging directory."""
-    live_p, staged_p = path_class(live), path_class(staged)
+    rename-aside swap on the :mod:`..tablefs` filesystem ``fs``: live →
+    ``trash``, staged → live, delete trash. A missing ``live`` is simply
+    created. If staged cannot be moved in, the old partition is put back and
+    the error raised, so the partition keeps its old rows; the caller deletes
+    its staging directory."""
     aside = None
-    if fs.exists(live_p):
-        aside = path_class(trash)
-        if not fs.rename(live_p, aside):
+    if fs.exists(live):
+        aside = trash
+        if not fs.rename(live, aside):
             raise IOError(f"could not move partition {live} aside")
     else:
-        fs.mkdirs(live_p.getParent())
+        fs.mkdirs(live.rsplit("/", 1)[0])
     try:
-        if not fs.rename(staged_p, live_p):
+        if not fs.rename(staged, live):
             raise IOError(f"could not move {staged} to {live}")
     except BaseException:
         if aside is not None:
-            fs.delete(live_p, True)  # whatever part of staged got there
-            fs.rename(aside, live_p)
+            fs.delete(live, True)  # whatever part of staged got there
+            fs.rename(aside, live)
         raise
     if aside is not None:
         fs.delete(aside, True)
@@ -96,18 +99,13 @@ def write_driver_batch(
 
     upkeep = SchemaUpkeep(batch.spark, path, partition_cols, mode)
     upkeep.before_write(batch.schema)
-    fs, path_class = upkeep.table.fs, upkeep.table.path_class
-    root = path.rstrip("/")
+    fs, root = upkeep.table.fs, upkeep.table.root
     token = uuid.uuid4().hex
     staged = f"{root}/.ingest-{token}"
     try:
-        out = fs.create(path_class(f"{staged}/part-00000-{uuid.uuid4()}.c000.snappy.parquet"), True)
-        try:
-            out.write(bytearray(payload))
-        finally:
-            out.close()
-        swap_partition(fs, path_class, f"{root}/{rel}", staged, f"{root}/.ingest-trash-{token}")
+        fs.write_bytes(f"{staged}/part-00000-{uuid.uuid4()}.c000.snappy.parquet", payload)
+        swap_partition(fs, f"{root}/{rel}", staged, f"{root}/.ingest-trash-{token}")
     except BaseException:
-        fs.delete(path_class(staged), True)
+        fs.delete(staged, True)
         raise
     upkeep.after_write()

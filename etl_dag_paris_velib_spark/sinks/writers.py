@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from ..sources.driver_ingest import DriverBatch
 from ..sources.readers import read_parquet
 from ..table_schema import SchemaUpkeep
+from ..tablefs import filesystem
 from .staged import swap_partition, write_driver_batch
 
 
@@ -177,8 +178,9 @@ def compact_partitions(
 
     Plan-then-rewrite, touching ONLY partitions that need it:
 
-    1. list leaf files per partition directory via the Hadoop FS API
-       (works identically on file:// and s3a://),
+    1. list leaf files per partition directory through :mod:`..tablefs`
+       (plain file I/O for a path without a scheme, the Hadoop FS API for
+       file:// and s3a://),
     2. a partition needs compaction iff ``n_files > ceil(bytes/target)``,
     3. each such partition is rewritten with exactly that many output
        files (``repartition(n_out)`` scoped to the partition's rows) into
@@ -214,18 +216,9 @@ def compact_partitions(
     import math
     import uuid
 
-    path_class = spark._jvm.org.apache.hadoop.fs.Path
-    hconf = spark._jsc.hadoopConfiguration()
-    root = path_class(path)
-    fs = root.getFileSystem(hconf)
-    qroot = fs.makeQualified(root).toString()
-
+    fs = filesystem(spark, path)
     sizes: dict[str, tuple[int, int]] = {}
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        f = it.next()
-        fp = f.getPath().toString()
-        rel = fp[len(qroot) + 1 :]
+    for rel, size in fs.files(path):
         parts = rel.split("/")
         if any(seg.startswith((".", "_")) for seg in parts):
             continue  # hidden/staging/_SUCCESS
@@ -241,7 +234,7 @@ def compact_partitions(
             )
         d = "/".join(dirs)
         b, n = sizes.get(d, (0, 0))
-        sizes[d] = (b + f.getLen(), n + 1)
+        sizes[d] = (b + size, n + 1)
 
     plan = {
         d: (b, n, max(1, math.ceil(b / target_file_bytes)))
@@ -261,13 +254,11 @@ def compact_partitions(
                 f"{staging}/{d}"
             )
             # the per-partition _SUCCESS marker of the staged write
-            fs.delete(path_class(f"{staging}/{d}/_SUCCESS"), False)
+            fs.delete(f"{staging}/{d}/_SUCCESS", False)
             report[d] = (b, n_before, n_out)
         for i, d in enumerate(plan):
             assert d, "empty partition key must be impossible post-validation"
-            swap_partition(
-                fs, path_class, f"{path}/{d}", f"{staging}/{d}", f"{staging}-trash-{i}"
-            )
+            swap_partition(fs, f"{path}/{d}", f"{staging}/{d}", f"{staging}-trash-{i}")
     finally:
-        fs.delete(path_class(staging), True)
+        fs.delete(staging, True)
     return report

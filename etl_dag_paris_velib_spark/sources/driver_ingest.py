@@ -41,7 +41,7 @@ has.
 
 A bronze path without a scheme is a local file, as the fetchers write it
 (:mod:`.fetcher`), and is read with Python; any other path is read through
-the Hadoop FileSystem API.
+the Hadoop FileSystem API (:mod:`..tablefs` makes that choice).
 """
 
 from __future__ import annotations
@@ -75,7 +75,7 @@ from ..schemas import (
     WEATHER_ENVELOPE_SCHEMA,
     WEATHER_SCHEMA,
 )
-from ..table_schema import read_bytes
+from ..tablefs import filesystem
 
 PARTITION_COLS = ("ingest_date", "ingest_hour")
 
@@ -156,13 +156,7 @@ def _read_text(spark: SparkSession, path: str) -> str:
     if _GLOB_CHARS.intersection(path) or name.startswith(("_", ".")):
         raise _Declined("path Spark may read differently")
     try:
-        if "://" not in path and not path.startswith("file:"):
-            with open(path, "rb") as f:
-                data = f.read()
-        else:
-            jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-            data = read_bytes(jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath)
-        return data.decode("utf-8")
+        return filesystem(spark, path).read_bytes(path).decode("utf-8")
     except (OSError, UnicodeDecodeError) as err:
         raise _Declined("unreadable file") from err
 

@@ -25,18 +25,21 @@ used the same data schema:
   existing path) leaves it alone.
 
 Nullability is relaxed before the schema is stored or compared, because Spark
-reads every parquet column as nullable. All file access goes through the
-Hadoop FileSystem API, so ``s3a://`` tables work the same as local ones.
+reads every parquet column as nullable. File access goes through
+:mod:`.tablefs`: plain Python file I/O for a path without a scheme, so
+reading the file costs no py4j round trip, and the Hadoop FileSystem API for
+any other (``file://``, ``s3a://``), so those tables work the same.
 """
 
 from __future__ import annotations
 
-import functools
 import json
 import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
+
+from .tablefs import filesystem
 
 SCHEMA_FILE = "_schema.json"
 
@@ -82,64 +85,38 @@ def _data_schema_json(schema: StructType, partition_cols: tuple[str, ...]) -> st
     return json.dumps(_relaxed({"type": "struct", "fields": fields}), sort_keys=True)
 
 
-def read_bytes(fs, path) -> bytes:
-    """The whole file at the Hadoop ``path`` on the FileSystem ``fs``."""
-    stream = fs.open(path)
-    try:
-        return bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-
-
-@functools.lru_cache(maxsize=None)
-def _path_class(jvm):
-    """Hadoop's ``Path`` class; resolving it costs five JVM round trips."""
-    return jvm.org.apache.hadoop.fs.Path
-
-
 class _Table:
-    """A table's schema file on its Hadoop FileSystem."""
+    """A table's schema file, on the table's :mod:`.tablefs` filesystem."""
 
     def __init__(self, spark: SparkSession, path: str) -> None:
-        self.path_class = _path_class(spark._jvm)
-        self.file = self.path_class(path, SCHEMA_FILE)
-        self.fs = self.file.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    @functools.cached_property
-    def root(self):
-        return self.file.getParent()
+        self.fs = filesystem(spark, path)
+        self.root = path.rstrip("/")
+        self.file = f"{self.root}/{SCHEMA_FILE}"
 
     def read_text(self) -> str | None:
         """The schema file's text, or None when there is none."""
         if not self.fs.exists(self.file):
             return None
-        return read_bytes(self.fs, self.file).decode("utf-8")
+        return self.fs.read_bytes(self.file).decode("utf-8")
 
     def has_data(self) -> bool:
         """Whether the root holds a file Spark reads as table data; stops at
         the first one."""
         if not self.fs.exists(self.root):
             return False
-        qroot = self.fs.makeQualified(self.root).toString()
-        it = self.fs.listFiles(self.root, True)
-        while it.hasNext():
-            rel = it.next().getPath().toString()[len(qroot) + 1 :]
-            if not any(_hidden(seg) for seg in rel.split("/")):
-                return True
-        return False
+        return any(
+            not any(_hidden(seg) for seg in rel.split("/")) for rel, _ in self.fs.files(self.root)
+        )
 
     def write_text(self, text: str) -> None:
         """Write the schema file whole: to a hidden name, then renamed, so a
-        reader never sees it half written."""
-        tmp = self.path_class(self.root, f".{SCHEMA_FILE}.{uuid.uuid4().hex}")
-        out = self.fs.create(tmp, True)
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-        finally:
-            out.close()
+        reader never sees it half written. The rename refuses an existing
+        file, so of two writers creating the table at once one raises."""
+        tmp = f"{self.root}/.{SCHEMA_FILE}.{uuid.uuid4().hex}"
+        self.fs.write_bytes(tmp, text.encode("utf-8"))
         if not self.fs.rename(tmp, self.file):
             self.fs.delete(tmp, False)
-            raise IOError(f"could not rename {tmp.toString()} to {self.file.toString()}")
+            raise IOError(f"could not rename {tmp} to {self.file}")
 
 
 def read_schema(spark: SparkSession, path: str) -> StructType | None:

@@ -7,12 +7,15 @@ every ``BRANCH_INGEST`` entry decline): both must give the same
 ``spark.read.parquet`` schema and rows and a byte-identical ``_schema.json``.
 Envelopes outside the driver path's exact subset must be declined, and then
 ``run_pipeline`` must give exactly what the Spark path gives, errors
-included.
+included. A table named by a plain path (Python file I/O) and one named by a
+``file://`` URI (the Hadoop FileSystem API, ``tablefs.py``) must come out
+the same, and keep the swap's rules on both.
 """
 
 from __future__ import annotations
 
 import contextlib
+import gc
 import glob
 import importlib.util
 import json
@@ -36,8 +39,10 @@ from etl_dag_paris_velib_spark.sources.driver_ingest import (
     WEATHER_BATCH_SCHEMA,
 )
 from etl_dag_paris_velib_spark.sources.fetcher import FileFetcher
+from etl_dag_paris_velib_spark.sources.readers import read_parquet
 from etl_dag_paris_velib_spark.sources.velib import with_ingest_partitions
 from etl_dag_paris_velib_spark.table_schema import SCHEMA_FILE
+from etl_dag_paris_velib_spark.tablefs import HadoopFS, LocalFS, filesystem
 from test_ingest_equivalence import EDGE_STATIONS
 
 RUN_TS = datetime(2025, 1, 31, 10, tzinfo=timezone.utc)
@@ -270,6 +275,26 @@ def test_run_pipeline_submits_no_spark_job(spark, tmp_path, fixtures_dir):
         assert jobs_submitted(spark, lambda: run(spark, str(tmp_path / "spark"), files)) == 2
 
 
+def test_plain_path_write_makes_one_round_trip(spark, tmp_path, fixtures_dir):
+    """A driver batch written to a table named by a plain path asks the JVM
+    only for the Spark version (the footer's): its file work is Python's."""
+    fixture = os.path.join(fixtures_dir, "station_status.json")
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+    for h in range(2):  # creates the table, then adds a partition to it
+        batch = pipeline.BRANCH_INGEST["station_status"](spark, fixture, RUN_TS + timedelta(hours=h))
+        gc.collect()
+        gc.disable()  # a collection may free JVM objects, each a round trip
+        client.send_command = lambda *a, **k: calls.append(a) or send(*a, **k)
+        try:
+            write_partitioned_table(batch, str(tmp_path / "gold"))
+        finally:
+            client.send_command = send
+            gc.enable()
+        assert len(calls) == 1, calls
+        calls.clear()
+
+
 def _hidden_dirs(table: str) -> list[str]:
     return [
         os.path.join(d, n)
@@ -292,7 +317,7 @@ def test_rerun_leaves_one_file_and_no_staging(spark, tmp_path, fixtures_dir):
 
 
 class FailSecondRename:
-    """A Hadoop FileSystem whose second ``rename`` fails."""
+    """A :mod:`tablefs` filesystem whose second ``rename`` fails."""
 
     def __init__(self, fs) -> None:
         self._fs = fs
@@ -308,39 +333,90 @@ class FailSecondRename:
         return getattr(self._fs, name)
 
 
-def _failing_swap(monkeypatch, module):
+def _failing_swap(monkeypatch, module, fs_class):
     real = staged.swap_partition
-    monkeypatch.setattr(module, "swap_partition", lambda fs, *a: real(FailSecondRename(fs), *a))
+
+    def swap(fs, *a):
+        assert type(fs) is fs_class
+        real(FailSecondRename(fs), *a)
+
+    monkeypatch.setattr(module, "swap_partition", swap)
 
 
-def test_failed_swap_keeps_old_partition(spark, tmp_path, fixtures_dir, monkeypatch):
-    path = str(tmp_path / "gold")
+#: a table named by a plain path goes through LocalFS, by a file:// URI
+#: through HadoopFS
+TABLE_NAMING = pytest.mark.parametrize(
+    "uri, fs_class", [(False, LocalFS), (True, HadoopFS)], ids=["plain", "file-uri"]
+)
+
+
+def table_path(local, uri: bool) -> str:
+    return f"file://{local}" if uri else str(local)
+
+
+@TABLE_NAMING
+def test_failed_swap_keeps_old_partition(spark, tmp_path, fixtures_dir, monkeypatch, uri, fs_class):
+    local = tmp_path / "gold"
+    path = table_path(local, uri)
     fixture = os.path.join(fixtures_dir, "station_status.json")
     write_partitioned_table(pipeline.BRANCH_INGEST["station_status"](spark, fixture, RUN_TS), path)
     before = rows(spark.read.parquet(path))
     changed = envelope_file(tmp_path / "in", "station_status", station_envelope([{"station_id": 1}]))
     batch = pipeline.BRANCH_INGEST["station_status"](spark, changed, RUN_TS)
-    _failing_swap(monkeypatch, staged)
+    _failing_swap(monkeypatch, staged, fs_class)
     with pytest.raises(IOError):
         write_partitioned_table(batch, path)
     assert rows(spark.read.parquet(path)) == before
-    assert _hidden_dirs(path) == []
+    assert _hidden_dirs(str(local)) == []
 
 
-def test_failed_compaction_swap_keeps_old_partition(spark, tmp_path, monkeypatch):
+@TABLE_NAMING
+def test_failed_compaction_swap_keeps_old_partition(spark, tmp_path, monkeypatch, uri, fs_class):
     from etl_dag_paris_velib_spark.sinks.writers import compact_partitions
 
-    path = str(tmp_path / "t")
+    local = tmp_path / "t"
+    path = table_path(local, uri)
     for i in range(2):
         spark.range(i * 10, i * 10 + 10).selectExpr("id", "'a' AS pt").write.mode("append").partitionBy("pt").parquet(path)
     before = rows(spark.read.parquet(path))
-    files = sorted(glob.glob(os.path.join(path, "pt=a", "part-*")))
-    _failing_swap(monkeypatch, writers)
+    files = sorted(glob.glob(os.path.join(local, "pt=a", "part-*")))
+    _failing_swap(monkeypatch, writers, fs_class)
     with pytest.raises(IOError):
         compact_partitions(spark, path, partition_cols=("pt",))
     assert rows(spark.read.parquet(path)) == before
-    assert sorted(glob.glob(os.path.join(path, "pt=a", "part-*"))) == files
-    assert _hidden_dirs(path) == []
+    assert sorted(glob.glob(os.path.join(local, "pt=a", "part-*"))) == files
+    assert _hidden_dirs(str(local)) == []
+
+
+def test_plain_and_uri_tables_are_the_same(spark, tmp_path):
+    """The same driver batches, written to a table named by a plain path
+    (LocalFS) and to one named by a ``file://`` URI (HadoopFS), re-running
+    the first hour: the two tables are the same."""
+    feed = _load_feed()(str(tmp_path / "feed"), 7)
+    hours = [feed.next_hour() for _ in range(2)]
+    plain, uri = tmp_path / "plain", tmp_path / "uri"
+    for hour in hours + hours[:1]:
+        ts = datetime.fromtimestamp(hour.run_ts, timezone.utc)
+        for name, src in (("station_status", hour.station_path), ("weather", hour.weather_path)):
+            batch = pipeline.BRANCH_INGEST[name](spark, src, ts)
+            write_partitioned_table(batch, str(plain / name))
+            write_partitioned_table(batch, table_path(uri / name, True))
+    assert type(filesystem(spark, str(plain))) is LocalFS
+    assert type(filesystem(spark, table_path(uri, True))) is HadoopFS
+    for name in BRANCHES:
+        got, want = str(plain / name), str(uri / name)
+        assert_same_table(spark, got, want)
+        assert rows(read_parquet(spark, got)) == rows(read_parquet(spark, table_path(want, True)))
+        footers = []
+        for table in (got, want):
+            parts = sorted(glob.glob(os.path.join(table, "*", "*")))
+            assert len(parts) == 2
+            for part in parts:
+                data = [f for f in os.listdir(part) if not f.startswith(".")]
+                assert len(data) == 1 and re.fullmatch(r"part-00000-[-0-9a-f]{36}\.c000\.snappy\.parquet", data[0])
+            footers.append([pq.read_metadata(glob.glob(os.path.join(p, "part-*"))[0]).metadata for p in parts])
+            assert _hidden_dirs(table) == []
+        assert footers[0] == footers[1]
 
 
 # --- declined envelopes -----------------------------------------------------

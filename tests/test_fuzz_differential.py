@@ -2440,7 +2440,8 @@ def _gen_stream_config(rng: random.Random):
     therefore itself one of the swept properties.
 
     Offline sweep record: seeds 33000-33999 (1,000 configs) at sf0.01 —
-    ZERO divergences (tools/fuzz_sweep_25.py replays it).
+    ZERO divergences (replayed through this grammar's generator and
+    comparator, as the seeded subset here runs them).
     """
     from pyspark.sql import functions as F
 
@@ -2679,7 +2680,8 @@ def _gen_session_config(rng: random.Random):
     Island aggregates themselves are order-free (min/max/count/sum).
 
     Offline sweep record: seeds 34000-34999 (1,000 configs) at sf0.01 —
-    ZERO divergences (tools/fuzz_sweep_26.py replays it).
+    ZERO divergences (replayed through this grammar's generator and
+    comparator, as the seeded subset here runs them).
     """
     from pyspark.sql import functions as F
 

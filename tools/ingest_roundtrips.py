@@ -1,15 +1,18 @@
 """Driver-side cost of each hourly ingest branch, on both of its paths.
 
-For each branch of ``pipeline.BRANCH_INGEST`` this prints two JSON lines,
+For each branch of ``pipeline.BRANCH_INGEST`` this prints three JSON lines,
 from one seeded hour of ``perfbench/feed.py`` (1,474 station rows, one
 weather row):
 
-- ``"path": "driver"``, the path ``pipeline.run_branch`` takes: the median
-  wall time of the ingest (parse and convert, ``BRANCH_INGEST[name]``) and
-  of the write (``write_partitioned_table`` of the batch, one new hourly
+- ``"path": "driver"``, the path ``pipeline.run_branch`` takes, once for a
+  table named by a plain path (``"table": "plain"``) and once for the same
+  kind of table named by a ``file://`` URI (``"table": "file_uri"``): the
+  median wall time of the ingest (parse and convert, ``BRANCH_INGEST[name]``)
+  and of the write (``write_partitioned_table`` of the batch, one new hourly
   partition per rep), and the py4j round trips (Python-to-JVM calls) each
-  makes. Most of a write's time on a local table is the Hadoop local
-  filesystem forking ``chmod`` for each file and directory it creates.
+  makes. A plain path is written with Python file I/O (one round trip, the
+  Spark version); a ``file://`` one through the Hadoop FileSystem API, whose
+  local filesystem forks ``chmod`` for each file and directory it creates.
 - ``"path": "spark_plan"``, the plan a declined envelope runs
   (``pipeline.branch_plan``: ingest, ``observe``, partition columns), built
   without executing it: round trips, median build time and the ``Project``
@@ -91,32 +94,42 @@ def main() -> None:
             hour = feed_hour(os.path.join(work, "bronze"))
             bronze = {"station_status": hour.station_path, "weather": hour.weather_path}
             run_ts = datetime.fromtimestamp(hour.run_ts, timezone.utc)
+            tables = {
+                "plain": os.path.join(work, "gold"),
+                "file_uri": "file://" + os.path.join(work, "gold_uri"),
+            }
             for name in pipeline.BRANCH_INGEST:
-                ingest, write = [], []
+                ingest, writes = [], {table: [] for table in tables}
                 for i in range(args.reps + 1):
                     ts = run_ts + timedelta(hours=i)
                     batch, secs, trips = measured(
                         lambda: pipeline.BRANCH_INGEST[name](spark, bronze[name], ts)
                     )
                     ingest.append((secs, trips))
-                    out = os.path.join(work, "gold", name)
-                    write.append(measured(lambda: pipeline.write_partitioned_table(batch, out))[1:])
-                ingest, write = ingest[1:], write[1:]
-                print(
-                    json.dumps(
-                        {
-                            "branch": name,
-                            "path": "driver",
-                            "rows": batch.rows,
-                            "ingest_ms_p50": ms_p50(s for s, _ in ingest),
-                            "ingest_round_trips_max": max(n for _, n in ingest),
-                            "write_ms_p50": ms_p50(s for s, _ in write),
-                            "write_round_trips_min": min(n for _, n in write),
-                            "write_round_trips_max": max(n for _, n in write),
-                        }
-                    ),
-                    flush=True,
-                )
+                    for table, gold in tables.items():
+                        out = f"{gold}/{name}"
+                        writes[table].append(
+                            measured(lambda: pipeline.write_partitioned_table(batch, out))[1:]
+                        )
+                ingest = ingest[1:]
+                for table, write in writes.items():
+                    write = write[1:]
+                    print(
+                        json.dumps(
+                            {
+                                "branch": name,
+                                "path": "driver",
+                                "table": table,
+                                "rows": batch.rows,
+                                "ingest_ms_p50": ms_p50(s for s, _ in ingest),
+                                "ingest_round_trips_max": max(n for _, n in ingest),
+                                "write_ms_p50": ms_p50(s for s, _ in write),
+                                "write_round_trips_min": min(n for _, n in write),
+                                "write_round_trips_max": max(n for _, n in write),
+                            }
+                        ),
+                        flush=True,
+                    )
 
                 builds = []
                 for i in range(args.reps + 1):
