@@ -1,34 +1,38 @@
 """Process-level plan-cache plumbing shared by the operator modules.
 
-Several operator families keep a bounded LRU of persisted intermediates
-(similarity pair sets, connected-component maps, the co-supply edge list)
-so that a suite of queries consuming the SAME expensive artifact within one
-process reuses it instead of recomputing. Two cross-cutting concerns live
-here so each module does not reinvent them:
+Several operator families keep persisted intermediates across calls
+(similarity pair sets, connected-component maps, the co-supply edge list,
+q154's index artifacts, multi-scan graph and spec intermediates) so that a
+suite of queries consuming the SAME expensive artifact within one process
+reuses it instead of recomputing. Every one of them is a :class:`PlanCache`
+instance; the cross-cutting concerns live here so no module reinvents them:
 
 - :func:`session_token` — a collision-free per-``SparkSession`` cache-key
   component. ``id(session)`` can be REUSED after a session object is
   garbage-collected (CPython recycles addresses), which would let a stale
   cache entry leak into a new session; a uuid attached to the session
   object on first use cannot collide.
-- :func:`register_cache_clearer` / :func:`clear_plan_caches` — a registry
-  of "drop everything" callbacks, one per module LRU, so cold-path
-  measurement code (bench.py's regression re-time) can empty every
-  process-level cache AND Spark's own CacheManager in one call. Without
-  this, re-timing a flagged query measures an InMemoryTableScan of the
-  first run's persisted intermediates, not the plan.
+- :func:`clear_plan_caches` — empties every :class:`PlanCache` (each
+  registers itself when built) AND Spark's own CacheManager in one call,
+  for cold-path measurement: bench.py's regression re-time, and each
+  ``llm_dedup`` benchmark pass (``perfbench/workloads.py``), which must pay
+  the full cache build on every pass. Without this, re-timing a query
+  measures an InMemoryTableScan of the first run's persisted
+  intermediates, not the plan.
 """
 
 from __future__ import annotations
 
+import itertools
 import uuid
-from collections.abc import Callable
+from collections import OrderedDict
 
 from pyspark.sql import SparkSession
 
 _TOKEN_ATTR = "_spark_graft_cache_token"
 
-_CLEARERS: list[Callable[[], None]] = []
+#: every PlanCache ever built, in construction order (clear_plan_caches)
+_CACHES: list[PlanCache] = []
 
 
 def session_token(spark: SparkSession) -> str:
@@ -40,88 +44,60 @@ def session_token(spark: SparkSession) -> str:
     return tok
 
 
-def register_cache_clearer(fn: Callable[[], None]) -> Callable[[], None]:
-    """Register a module's drop-my-LRU callback; returns ``fn`` so it can
-    be used as a decorator."""
-    _CLEARERS.append(fn)
-    return fn
-
-
 def clear_plan_caches(spark: SparkSession | None = None) -> None:
-    """Empty every registered module LRU (unpersisting their DataFrames)
-    and, when a session is given, Spark's CacheManager too — so the next
+    """Empty every :class:`PlanCache` (unpersisting their DataFrames) and,
+    when a session is given, Spark's CacheManager too — so the next
     execution of any registered plan is a genuine cold run."""
-    for fn in _CLEARERS:
-        fn()
+    for cache in _CACHES:
+        cache.clear()
     if spark is not None:
         spark.catalog.clearCache()
 
 
-#: Generic bounded registry for one-off persisted plan intermediates
-#: (specs that scan an expensive derived frame more than once persist it
-#: through here). Oldest entries unpersist on overflow — correctness is
-#: unaffected, lineage recomputes — and clear_plan_caches drops them all
-#: for cold-path measurement.
-_TRACKED: list = []
-_TRACKED_MAX = 32
-
-
-def track_persist(df):
-    """Record a persisted DataFrame in the shared bounded registry and
-    return it (chainable around ``.persist(...)``)."""
-    _TRACKED.append(df)
-    while len(_TRACKED) > _TRACKED_MAX:
-        old = _TRACKED.pop(0)
+def _unpersist(value) -> None:
+    """Unpersist every DataFrame in ``value``: a frame, or a tuple or list
+    nesting frames beside plain values (the edge cache's ``(edges, deg,
+    n_nodes)``, q154's list of ``(bands, hashes)`` pairs)."""
+    if isinstance(value, (tuple, list)):
+        for v in value:
+            _unpersist(v)
+    elif hasattr(value, "unpersist"):
         try:
-            old.unpersist()
-        except Exception:
-            pass
-    return df
-
-
-@register_cache_clearer
-def _clear_tracked() -> None:
-    while _TRACKED:
-        old = _TRACKED.pop()
-        try:
-            old.unpersist()
+            value.unpersist()
         except Exception:
             pass
 
-class PinnedLRU:
-    """Bounded FIFO-eviction cache of DataFrames with PINNED (cap-immune)
-    keys — the shared policy behind the similarity pair cache and the
-    dedup component cache (one implementation, r12: the two modules had
-    drifting near-copies).
 
-    Semantics:
+class PlanCache:
+    """Bounded LRU of persisted plan intermediates with PINNED (cap-immune)
+    keys.
 
-    - ``put(key, df, pin=False)``: insert; when the UNPINNED population
-      is at cap, evict oldest unpinned entries first (``on_evict`` runs
-      on each victim — unpersist for persisted-frame caches). Inserting
-      a PINNED entry never evicts anything: pinned entries occupy no
-      capped slot, so there is nothing to make room for.
-    - ``hit(key, pin=False)``: return the entry; a pinning caller pins
-      on HIT too (the entry may have been inserted unpinned by a
-      non-canary warm-up).
-    - Pins are per-SESSION: every key embeds a ``session_token`` element,
-      and a put DEMOTES (not evicts) pinned keys that do not contain the
-      inserting session's token — a process cycling SparkSessions would
+    - ``put(key, value, pin=False, session_token=None)``: insert (or
+      replace) and return ``value``; then, while more than ``max_unpinned``
+      entries are unpinned, the least recently used unpinned one leaves
+      and every DataFrame in it is unpersisted (correctness is unaffected
+      — lineage recomputes). Pinned entries occupy no capped slot, so a
+      pinned put evicts nothing.
+    - ``get(key, pin=False)``: the entry or None; a hit refreshes its
+      recency, and a pinning caller pins on HIT too (the entry may have
+      been inserted unpinned by a non-canary warm-up).
+    - ``track(value)``: keyless insert under a fresh key, for persists
+      that are bounded but never looked up again; returns ``value``.
+    - Pins are per-SESSION: keys embed a ``session_token`` element, and a
+      put that names its session DEMOTES (not evicts) pinned keys that do
+      not contain that token — a process cycling SparkSessions would
       otherwise accumulate immortal pins holding dead sessions' frames;
       demoted entries age out through the normal cap.
-    - ``clear()`` drops everything, pins included (cold-path protocol),
-      running ``on_evict`` on each.
+    - ``clear()`` drops everything, pins included (cold-path protocol);
+      :func:`clear_plan_caches` calls it on every instance.
     """
 
-    def __init__(self, max_unpinned: int, on_evict=None):
-        import collections
-
+    def __init__(self, max_unpinned: int):
         self.max_unpinned = max_unpinned
-        self._on_evict = on_evict
-        self.data: "collections.OrderedDict[tuple, object]" = (
-            collections.OrderedDict()
-        )
+        self.data: OrderedDict = OrderedDict()
         self.pins: set = set()
+        self._seq = itertools.count()
+        _CACHES.append(self)
 
     def __contains__(self, key) -> bool:
         return key in self.data
@@ -132,38 +108,41 @@ class PinnedLRU:
     def __iter__(self):
         return iter(self.data)
 
-    def _evict(self, key) -> None:
-        obj = self.data.pop(key)
-        if self._on_evict is not None:
-            try:
-                self._on_evict(obj)
-            except Exception:
-                pass
-
-    def hit(self, key, pin: bool = False):
+    def get(self, key, pin: bool = False):
+        if key not in self.data:
+            return None
         if pin:
             self.pins.add(key)
+        self.data.move_to_end(key)
         return self.data[key]
 
-    def put(self, key, obj, pin: bool = False, session_token=None) -> None:
+    def put(self, key, value, pin: bool = False, session_token=None):
+        if session_token is not None:
+            self.pins = {k for k in self.pins if session_token in k}
         if pin:
             self.pins.add(key)
-        if session_token is not None:
-            # demote pins from other/dead sessions to evictable
-            self.pins = {k for k in self.pins if session_token in k}
-            if pin:
-                self.pins.add(key)
-        if not pin:
-            while (
-                sum(1 for k in self.data if k not in self.pins)
-                >= self.max_unpinned
-            ):
-                victim = next(k for k in self.data if k not in self.pins)
-                self._evict(victim)
-        self.data[key] = obj
+        self.data[key] = value
+        self.data.move_to_end(key)
+        unpinned = [k for k in self.data if k not in self.pins]
+        for k in unpinned[: max(0, len(unpinned) - self.max_unpinned)]:
+            _unpersist(self.data.pop(k))
+        return value
+
+    def track(self, value):
+        return self.put(("tracked", next(self._seq)), value)
 
     def clear(self) -> None:
         self.pins.clear()
         while self.data:
-            key = next(iter(self.data))
-            self._evict(key)
+            _unpersist(self.data.popitem(last=False)[1])
+
+
+#: Generic bounded registry for one-off persisted plan intermediates
+#: (specs that scan an expensive derived frame more than once persist it
+#: through here). Oldest entries unpersist on overflow and
+#: clear_plan_caches drops them all for cold-path measurement.
+_TRACKED = PlanCache(32)
+
+#: Record a persisted DataFrame in the shared bounded registry and return
+#: it (chainable around ``.persist(...)``).
+track_persist = _TRACKED.track

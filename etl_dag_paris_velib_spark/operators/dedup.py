@@ -80,7 +80,7 @@ def exact_dedup(
 #: q42/q56-class consumers ask for the SAME pair graph's components within
 #: one session — reuse the localCheckpoint-backed result instead of
 #: re-running the fixpoint.
-from ..cacheutil import PinnedLRU, register_cache_clearer, session_token
+from ..cacheutil import PlanCache, session_token
 
 # 16, not 8 (r11): q153/q154/q156/q158 insert 8 component entries between
 # q152's warm and q42's re-request in alphabetical sweep order — at cap 8
@@ -88,32 +88,15 @@ from ..cacheutil import PinnedLRU, register_cache_clearer, session_token
 # its 0.025s warm sf1.0 budget). localCheckpoint-backed entries are
 # bounded by cluster-member counts, so 16 is cheap. Since r12 the q42
 # standing canary's entry is PINNED (cap-immune, per-session) through
-# the shared cacheutil.PinnedLRU policy — see
+# the shared cacheutil.PlanCache policy — see
 # similarity.py's pair-cache note for the rotation-eviction story.
+# Entries are localCheckpoint-backed: dropping the reference releases
+# them, and the unpersist on eviction finds nothing cached.
 _CC_CACHE_MAX = 16
-
-# entries are localCheckpoint-backed: dropping the reference releases
-# them, no unpersist needed on evict
-_CC_CACHE = PinnedLRU(_CC_CACHE_MAX)
-
-
-def _cc_cache_put(key: tuple, df: DataFrame, pin: bool = False) -> None:
-    try:
-        tok = session_token(df.sparkSession)
-    except Exception:
-        tok = None
-    _CC_CACHE.put(key, df, pin=pin, session_token=tok)
-
-
-def _cc_cache_hit(key: tuple, pin: bool = False) -> DataFrame:
-    return _CC_CACHE.hit(key, pin=pin)
-
-
-@register_cache_clearer
-def clear_cc_cache() -> None:
-    """Drop every cached component map, pinned included (cold-path
-    measurement resets the canary pins with the entries)."""
-    _CC_CACHE.clear()
+_CC_CACHE = PlanCache(_CC_CACHE_MAX)
+#: drop every cached component map, pinned included (cold-path
+#: measurement resets the canary pins with the entries)
+clear_cc_cache = _CC_CACHE.clear
 
 
 def _iterate_scan_partitions(n_rows: int) -> int:
@@ -183,9 +166,10 @@ def near_dup_components(
     Returns (doc_id, component) for every doc appearing in any pair.
     """
     try:
+        tok = session_token(pairs.sparkSession)
         cache_key = (
             "cc",
-            session_token(pairs.sparkSession),
+            tok,
             pairs.semanticHash(),
             id_a,
             id_b,
@@ -194,13 +178,14 @@ def near_dup_components(
         )
     except Exception:
         cache_key = None
-    if cache_key is not None and cache_key in _CC_CACHE:
-        return _cc_cache_hit(cache_key, pin=pin)
+    cached = _CC_CACHE.get(cache_key, pin=pin)
+    if cached is not None:
+        return cached
 
     if method == "star":
         out = _components_star(pairs, id_a, id_b, max_iterations)
         if cache_key is not None:
-            _cc_cache_put(cache_key, out, pin=pin)
+            _CC_CACHE.put(cache_key, out, pin=pin, session_token=tok)
         return out
     if method != "label":
         raise ValueError(f"unknown method: {method!r} (label | star)")
@@ -321,7 +306,7 @@ def near_dup_components(
         )
     out = labels.select(F.col("id").alias("doc_id"), F.col("label").alias("component"))
     if cache_key is not None:
-        _cc_cache_put(cache_key, out, pin=pin)
+        _CC_CACHE.put(cache_key, out, pin=pin, session_token=tok)
     return out
 
 
@@ -360,9 +345,10 @@ def near_dup_components_multi(
     tests/test_llm_operators.py's multi-vs-single differential.
     """
     try:
+        tok = session_token(tagged_pairs.sparkSession)
         cache_key = (
             "cc-multi",
-            session_token(tagged_pairs.sparkSession),
+            tok,
             tagged_pairs.semanticHash(),
             tag_col,
             id_a,
@@ -371,8 +357,9 @@ def near_dup_components_multi(
         )
     except Exception:
         cache_key = None
-    if cache_key is not None and cache_key in _CC_CACHE:
-        return _cc_cache_hit(cache_key, pin=pin)
+    cached = _CC_CACHE.get(cache_key, pin=pin)
+    if cached is not None:
+        return cached
 
     tag = F.col(tag_col).alias("tag")
     edges = (
@@ -453,7 +440,7 @@ def near_dup_components_multi(
         F.col("label").alias("component"),
     )
     if cache_key is not None:
-        _cc_cache_put(cache_key, out, pin=pin)
+        _CC_CACHE.put(cache_key, out, pin=pin, session_token=tok)
     return out
 
 

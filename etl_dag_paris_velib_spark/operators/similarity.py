@@ -23,11 +23,16 @@ All hashing is md5-hex (portable: the DuckDB oracle in ``plans.llm``
 computes bit-identical signatures, so the differential gate checks the LSH
 logic itself, not just row counts).
 
-Caching note: the pair operators ``persist()`` their shingle/hash
-intermediates (multiple consumers; see each docstring) and cannot know
-when the caller is done with the returned DataFrame, so the entries stay
-cached until LRU eviction. Long-lived sessions running many operator
-instances should ``spark.catalog.clearCache()`` between phases, or pass
+Caching note: the MinHash candidate and verified pair sets live in the
+bounded ``_PAIR_CACHE`` (a ``cacheutil.PlanCache``) and are unpersisted
+when evicted. The shingle/hash intermediates the pair operators
+``persist()`` (multiple consumers; see each docstring) — in
+``minhash_lsh_pairs``, ``ngram_jaccard_pairs``, ``containment_pairs`` and
+``simhash_pairs`` — are in no bounded cache: the operators cannot know
+when the caller is done with the returned DataFrame, so they stay cached
+until ``spark.catalog.clearCache()`` (which ``clear_plan_caches(spark)``
+runs) or the session ends. Long-lived sessions running many operator
+instances should clear between phases, or pass
 ``persist_intermediate=False`` to trade recompute for zero cache
 footprint.
 """
@@ -55,12 +60,7 @@ from ..functions.vector import dot, l2_norm
 
 import threading
 
-from ..cacheutil import (
-    PinnedLRU,
-    register_cache_clearer,
-    session_token,
-    track_persist,
-)
+from ..cacheutil import PlanCache, session_token, track_persist
 
 #: serializes the session-global AQE toggle in _persist_udf_cache (see
 #: that docstring's CONCURRENCY note)
@@ -77,21 +77,15 @@ _AQE_TOGGLE_LOCK = threading.Lock()
 # Entries are persisted-but-spillable DataFrames, so 16 is cheap.
 # Structural guarantee since r12 (the r11 verdict's #2): the standing
 # canaries' (q21/q42) entries are PINNED — cap-immune, per-session —
-# through the shared cacheutil.PinnedLRU policy, so window rotations
+# through the shared cacheutil.PlanCache policy, so window rotations
 # can no longer evict them by inserting cap-many entries between the
 # builder and its consumer (the failure mode the r11 cap bump papered
 # over). Only clear_pair_cache() drops pinned entries.
 _PAIR_CACHE_MAX = 16
-
-
-def _unpersist_quiet(df) -> None:
-    try:
-        df.unpersist()
-    except Exception:
-        pass
-
-
-_PAIR_CACHE = PinnedLRU(_PAIR_CACHE_MAX, on_evict=_unpersist_quiet)
+_PAIR_CACHE = PlanCache(_PAIR_CACHE_MAX)
+#: unpersist and drop every cached pair set, pinned included (cold-path
+#: measurement resets the canary pins with the entries)
+clear_pair_cache = _PAIR_CACHE.clear
 
 
 def _content_fingerprint(df: DataFrame | None) -> tuple | None:
@@ -112,31 +106,6 @@ def _content_fingerprint(df: DataFrame | None) -> tuple | None:
     except Exception:
         files = []
     return (df.semanticHash(), hash(tuple(sorted(files))) if files else None)
-
-
-def _pair_cache_put(key: tuple, df: DataFrame, pin: bool = False) -> None:
-    """Insert into the bounded LRU (oldest UNPINNED evict-and-unpersist
-    past the cap; ``pin=True`` marks a standing-canary slot). The
-    current session's token rides along so stale pins from cycled
-    sessions demote to evictable instead of living forever."""
-    try:
-        tok = session_token(df.sparkSession)
-    except Exception:
-        tok = None
-    _PAIR_CACHE.put(key, df, pin=pin, session_token=tok)
-
-
-def _pair_cache_hit(key: tuple, pin: bool = False) -> DataFrame:
-    """Return the cached frame; a pinning caller pins on HIT too (the
-    entry may have been inserted unpinned by a non-canary warm-up)."""
-    return _PAIR_CACHE.hit(key, pin=pin)
-
-
-@register_cache_clearer
-def clear_pair_cache() -> None:
-    """Unpersist and drop every cached pair set, pinned included
-    (cold-path measurement resets the canary pins with the entries)."""
-    _PAIR_CACHE.clear()
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -346,9 +315,10 @@ def _minhash_candidates(
     signature → band → bucket chain, so the second family re-verifies
     from the cached candidates instead of re-hashing the corpus."""
     try:
+        tok = session_token(df.sparkSession)
         cache_key = (
             "cand",
-            session_token(df.sparkSession),
+            tok,
             _content_fingerprint(df),
             id_col,
             text_col,
@@ -371,8 +341,9 @@ def _minhash_candidates(
     )
     if persist_shingles:
         sh = sh.persist()
-    if cache_key is not None and cache_key in _PAIR_CACHE:
-        return sh, _pair_cache_hit(cache_key, pin=pin)
+    cand = _PAIR_CACHE.get(cache_key, pin=pin)
+    if cand is not None:
+        return sh, cand
     # JVM-expression signature (bit-identical to the Arrow pandas UDF
     # make_minhash_sig_udf — the property test pins it). The UDF was the
     # original choice (interpreted HOF lambdas lose a microbench of the
@@ -392,8 +363,8 @@ def _minhash_candidates(
     banded = _signature_bands(sh, k, bands)
     cand = _bucket_pairs(banded, F.col("id"))
     if cache_key is not None:
-        cand = cand.persist()  # UDF-free lineage since r08: plain persist
-        _pair_cache_put(cache_key, cand, pin=pin)
+        # UDF-free lineage since r08: plain persist
+        cand = _PAIR_CACHE.put(cache_key, cand.persist(), pin=pin, session_token=tok)
     return sh, cand
 
 
@@ -458,7 +429,7 @@ def minhash_lsh_pairs(
     """Near-duplicate pairs (id_a < id_b, exact Jaccard >= threshold).
 
     ``pin=True`` (the q21/q42 standing-canary path) makes the cached
-    entries cap-immune — see ``_PAIR_CACHE_PINS``.
+    entries cap-immune — see ``_PAIR_CACHE.pins``.
 
     Candidate recall for a pair with true Jaccard j is
     ``1 - (1 - j^r)^bands`` with r = k/bands; at the defaults (r=2, b=8)
@@ -484,8 +455,9 @@ def minhash_lsh_pairs(
         # plan digest), so a changed input or session misses. Bounded
         # LRU; evicted entries are unpersisted.
         try:
+            tok = session_token(df.sparkSession)
             cache_key = (
-                session_token(df.sparkSession),
+                tok,
                 _content_fingerprint(df),
                 id_col,
                 text_col,
@@ -496,8 +468,9 @@ def minhash_lsh_pairs(
             )
         except Exception:
             cache_key = None
-        if cache_key is not None and cache_key in _PAIR_CACHE:
-            return _pair_cache_hit(cache_key, pin=pin)
+        cached = _PAIR_CACHE.get(cache_key, pin=pin)
+        if cached is not None:
+            return cached
 
     sigh, cand = _minhash_candidates(
         df, id_col, text_col, k, bands, shingle_n, persist_intermediate,
@@ -525,8 +498,12 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
     )
     if cache_key is not None:
-        verified = verified.persist()
-        _pair_cache_put(cache_key, verified, pin=pin)
+        verified = _PAIR_CACHE.put(
+            cache_key,
+            verified.persist(),
+            pin=pin,
+            session_token=tok,
+        )
     return verified
 
 
@@ -2616,9 +2593,10 @@ def incremental_lsh_pairs(
         # be same-path parquet reads that grow in place between
         # increments (the kept corpus of a crawl loop), and a bare
         # semanticHash canonicalizes those by root path
+        tok = session_token(base.sparkSession)
         cache_key = (
             "inc_cand",
-            session_token(base.sparkSession),
+            tok,
             _content_fingerprint(base),
             _content_fingerprint(delta),
             _content_fingerprint(base_bands),
@@ -2631,9 +2609,8 @@ def incremental_lsh_pairs(
         )
     except Exception:
         cache_key = None
-    if cache_key is not None and cache_key in _PAIR_CACHE:
-        cand = _PAIR_CACHE.hit(cache_key)
-    else:
+    cand = _PAIR_CACHE.get(cache_key)
+    if cand is None:
         cand = (
             d.join(
                 a,
@@ -2655,8 +2632,7 @@ def incremental_lsh_pairs(
             # older entries instead of leaking one cached pair set per
             # call (this operator is expressly the repeated-increment
             # shape)
-            cand = cand.persist()
-            _pair_cache_put(cache_key, cand)
+            cand = _PAIR_CACHE.put(cache_key, cand.persist(), session_token=tok)
     # verify stage: hash-sets ONLY for docs that appear in a candidate
     # pair — semi-join the base corpus down to candidate ids before any
     # shingling (O(candidates), not O(|base|), per increment)

@@ -25,13 +25,12 @@ price bump is FP-exact by construction.
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..cacheutil import register_cache_clearer, session_token
+from ..cacheutil import PlanCache, session_token
 from ..sources.tpch import load_table
 from .spec import Registry
 
@@ -46,23 +45,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: co-supply edge list across the node-count job and both unrolled
 #: iterations — without it the distinct-pair build runs 4x (GraphX
 #: persists its edge RDD for exactly this reason). MEMORY_AND_DISK so a
-#: 100 TB edge list spills instead of OOMing; bounded LRU like
-#: similarity._PAIR_CACHE.
-_EDGE_CACHE: "OrderedDict[tuple, tuple[DataFrame, DataFrame, int]]" = OrderedDict()
+#: 100 TB edge list spills instead of OOMing; eviction and
+#: clear_plan_caches unpersist both frames of an entry.
 _EDGE_CACHE_MAX = 4
-
-
-@register_cache_clearer
-def clear_edge_cache() -> None:
-    """Unpersist and drop every cached co-supply graph (cold-path
-    measurement)."""
-    while _EDGE_CACHE:
-        _, (e_old, d_old, _n) = _EDGE_CACHE.popitem(last=False)
-        try:
-            e_old.unpersist()
-            d_old.unpersist()
-        except Exception:
-            pass
+_EDGE_CACHE = PlanCache(_EDGE_CACHE_MAX)
 
 
 def _cosupply_graph(
@@ -89,12 +75,7 @@ def _cosupply_graph(
         StorageLevel.MEMORY_AND_DISK
     )
     n_nodes = deg.count()  # one driver scalar; also materializes both caches
-    _EDGE_CACHE[key] = (edges, deg, n_nodes)
-    while len(_EDGE_CACHE) > _EDGE_CACHE_MAX:
-        _, (e_old, d_old, _n) = _EDGE_CACHE.popitem(last=False)
-        e_old.unpersist()
-        d_old.unpersist()
-    return _EDGE_CACHE[key]
+    return _EDGE_CACHE.put(key, (edges, deg, n_nodes))
 
 
 # ---------------------------------------------------------------------------
@@ -638,35 +619,16 @@ def q109(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: Persisted intermediates of the multi-scan graph operators
-#: (oriented_triangles' edge + oriented lists, bfs_hops' per-round
-#: frontier/distance frames), bounded like _EDGE_CACHE: oldest
-#: unpersisted on overflow (correctness unaffected — lineage recomputes),
-#: all dropped by clear_plan_caches for cold-path bench runs.
-_GRAPH_PERSISTS: list[DataFrame] = []
-_GRAPH_PERSISTS_MAX = 16
-
-
-def _track_graph_persist(df: DataFrame) -> DataFrame:
-    _GRAPH_PERSISTS.append(df)
-    while len(_GRAPH_PERSISTS) > _GRAPH_PERSISTS_MAX:
-        old = _GRAPH_PERSISTS.pop(0)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    return df
-
-
-@register_cache_clearer
-def clear_graph_persists() -> None:
-    """Unpersist every tracked graph-operator intermediate (cold-path
-    measurement)."""
-    while _GRAPH_PERSISTS:
-        old = _GRAPH_PERSISTS.pop()
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+#: (oriented_triangles' edge + oriented lists, bfs_hops' edge list, q122's
+#: pair set), bounded like _EDGE_CACHE: oldest unpersisted on overflow
+#: (correctness unaffected — lineage recomputes), all dropped by
+#: clear_plan_caches for cold-path bench runs. A tracker of its own, not
+#: cacheutil.track_persist's, so tools/scalecheck.py can clear ONLY these
+#: (clear_graph_persists) between cold BFS timings.
+_GRAPH_PERSISTS = PlanCache(16)
+#: unpersist every tracked graph-operator intermediate (cold-path
+#: measurement)
+clear_graph_persists = _GRAPH_PERSISTS.clear
 
 
 def oriented_triangles(
@@ -702,7 +664,7 @@ def oriented_triangles(
     e = edges.select(
         F.col(a_col).alias("a"), F.col(b_col).alias("b")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    _track_graph_persist(e)
+    _GRAPH_PERSISTS.track(e)
     deg = (
         e.select(F.col("a").alias("v"))
         .unionByName(e.select(F.col("b").alias("v")))
@@ -722,7 +684,7 @@ def oriented_triangles(
             "deg_dst"
         ),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    _track_graph_persist(oriented)
+    _GRAPH_PERSISTS.track(oriented)
     w1, w2, closing = (
         oriented.alias("w1"),
         oriented.alias("w2"),
@@ -826,7 +788,7 @@ def bfs_hops(
     when their frames are garbage collected; the edge list goes through
     the bounded ``_GRAPH_PERSISTS`` tracker.
     """
-    e = _track_graph_persist(
+    e = _GRAPH_PERSISTS.track(
         edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
     )
     dist = seed.select("v", F.lit(0).cast("int").alias("hops")).localCheckpoint()
@@ -902,7 +864,7 @@ def q122(spark: SparkSession, sf_dir: str) -> DataFrame:
     # support-pruned pair mining subtree appears once per consumer, and
     # persist ep so seed + edges share one computation (guide §2.3; ep
     # is the support-pruned pair set — corpus-sublinear by min_count)
-    ep = _track_graph_persist(
+    ep = _GRAPH_PERSISTS.track(
         basket_pair_counts(basket, min_count=2)
         .select("part_a", "part_b")
         .persist(StorageLevel.MEMORY_AND_DISK)

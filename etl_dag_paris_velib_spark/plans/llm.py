@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cacheutil import track_persist
+from ..cacheutil import PlanCache, session_token, track_persist
 from ..operators.dedup import bow_dedup, exact_dedup
 from ..operators.similarity import (
     all_pairs_nn,
@@ -139,7 +139,7 @@ SELECT id_a, id_b, round(j, 6) AS jaccard FROM scored WHERE j >= 0.5
 )
 def q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin=True: standing canary — its cache entries are cap-immune, the
-    # way its window slot is rotation-immune (similarity._PAIR_CACHE_PINS)
+    # way its window slot is rotation-immune (similarity._PAIR_CACHE.pins)
     pairs = minhash_lsh_pairs(_docs(spark, sf_dir), pin=True)
     return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
@@ -1096,71 +1096,38 @@ def q153(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q154_ARTS = None  # lazy OrderedDict — see _q154_artifacts
-_Q154_ARTS_MAX = 2  # diffcheck interleaves two sf_dirs in one session
-
-
-def _unpersist_arts(arts) -> None:
-    """Unpersist every frame of one artifact set (both eviction paths
-    share this — the tuple shape changes in ONE place)."""
-    for pair in arts:
-        for f in pair:
-            try:
-                f.unpersist()
-            except Exception:
-                pass
-
-
-def clear_q154_artifacts() -> None:
-    """Unpersist and drop every cached q154 artifact set — the cold-path
-    seam (registered in clear_plan_caches on first use; also called
-    directly by the single-pass pytest, which measures the COLD
-    construction and must not see a warm hit from an earlier q154 run
-    in the same session)."""
-    if _Q154_ARTS is None:
-        return
-    while _Q154_ARTS:
-        _, old = _Q154_ARTS.popitem(last=False)
-        _unpersist_arts(old)
+#: q154's persisted per-batch index artifacts, keyed by (session, input
+#: plan): a list of (bands, hashes) frame pairs, all unpersisted when the
+#: entry leaves (the ADVICE r11 leak: six persisted frames per invocation,
+#: never unpersisted, bypassing every bounded cache). Entries are
+#: increment-sized (bands rows + one hash array per doc); 2 because
+#: diffcheck interleaves two sf_dirs in one session.
+_Q154_ARTS = PlanCache(2)
+#: unpersist and drop every cached q154 artifact set — the cold-path seam,
+#: also called directly by the single-pass pytest, which measures the COLD
+#: construction and must not see a warm hit from an earlier q154 run
+clear_q154_artifacts = _Q154_ARTS.clear
 
 
 def _q154_artifacts(spark, docs, batches):
-    """Bounded LRU of q154's persisted per-batch index artifacts (the
-    ADVICE r11 leak: six persisted frames per invocation, never
-    unpersisted, bypassing every bounded cache). Keyed by (session,
-    input plan); eviction unpersists all six frames of the dropped
-    entry. Entries are increment-sized (bands rows + one hash array per
-    doc), so two live sets bound the session's pinned memory."""
-    global _Q154_ARTS
-    from collections import OrderedDict
-
-    from ..cacheutil import register_cache_clearer, session_token
     from ..operators.similarity import build_lsh_index
-
-    if _Q154_ARTS is None:
-        _Q154_ARTS = OrderedDict()
-        register_cache_clearer(clear_q154_artifacts)
 
     try:
         key = (session_token(spark), docs.semanticHash())
     except Exception:
-        # still TRACKED (synthetic unique key): an unkeyable input must
-        # not reopen the r11 leak — the set just ages out with the rest
-        import uuid
-
-        key = ("q154-unkeyed", uuid.uuid4().hex)
-    if key in _Q154_ARTS:
-        _Q154_ARTS.move_to_end(key)
-        return _Q154_ARTS[key]
+        key = None
+    arts = _Q154_ARTS.get(key)
+    if arts is not None:
+        return arts
     arts = []
     for b in batches:
         bt, ht = build_lsh_index(b)
         arts.append((bt.persist(), ht.persist()))
-    while len(_Q154_ARTS) >= _Q154_ARTS_MAX:
-        _, old = _Q154_ARTS.popitem(last=False)
-        _unpersist_arts(old)
-    _Q154_ARTS[key] = arts
-    return arts
+    if key is None:
+        # still TRACKED: an unkeyable input must not reopen the r11 leak
+        # — the set just ages out with the rest
+        return _Q154_ARTS.track(arts)
+    return _Q154_ARTS.put(key, arts)
 
 
 

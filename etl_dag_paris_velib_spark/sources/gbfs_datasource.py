@@ -52,7 +52,10 @@ DEFAULT_PARTITIONS = 4
 def _station_row(s: dict) -> tuple:
     """One GBFS station dict -> a STATION_STATUS_SCHEMA tuple (faithful
     types per SURVEY §1.5: long station_id, int flags, timestamp from
-    epoch seconds, surrogate record_id station_id_lastreported)."""
+    epoch seconds, surrogate record_id station_id_lastreported). The
+    timestamp is an AWARE UTC datetime: PySpark converts a naive one with
+    ``astimezone(timezone.utc)``, which reads it as the Python worker's
+    local time and shifts it on any host not set to UTC."""
     bike_types: dict[str, int] = {}
     for m in s.get("num_bikes_available_types") or []:
         bike_types.update(m)
@@ -67,7 +70,7 @@ def _station_row(s: dict) -> tuple:
         int(s["is_installed"]),
         int(s["is_renting"]),
         int(s["is_returning"]),
-        datetime.fromtimestamp(last_reported, tz=timezone.utc).replace(tzinfo=None),
+        datetime.fromtimestamp(last_reported, tz=timezone.utc),
         f"{int(s['station_id'])}_{last_reported}",
     )
 

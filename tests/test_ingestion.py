@@ -236,6 +236,48 @@ def test_gbfs_python_datasource_matches_flatten(spark):
     assert got == want
 
 
+@pytest.fixture
+def new_york_tz(monkeypatch):
+    """The process's local time zone set to America/New_York (UTC-5 in
+    winter) for one test, restored after it."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_gbfs_datasource_timestamps_ignore_local_time_zone(tmp_path, new_york_tz):
+    """Both GBFS readers' rows must carry the feed's epoch seconds through
+    PySpark's conversion of Python rows (the one the data source worker
+    applies) whatever the worker's local time zone: a naive datetime is
+    read as local time and came back 5 h late in New York."""
+    import json
+    import shutil
+
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+
+    from etl_dag_paris_velib_spark.sources.gbfs_datasource import (
+        GBFS_SOURCE_SCHEMA,
+        _GBFSReader,
+        _GBFSStreamReader,
+        _SlicePartition,
+    )
+
+    fixture = "tests/fixtures/station_status.json"
+    with open(fixture) as f:
+        want = [s["last_reported"] for s in json.load(f)["data"]["stations"]]
+    shutil.copy(fixture, tmp_path / "snap.json")
+    batch = list(_GBFSReader({"path": fixture, "numPartitions": "1"}).read(_SlicePartition(0, 1)))
+    stream, _ = _GBFSStreamReader({"path": str(tmp_path)}).read({"n": 0})
+    i = GBFS_SOURCE_SCHEMA.fieldNames().index("last_reported")
+    convert = LocalDataToArrowConversion._create_converter(GBFS_SOURCE_SCHEMA[i].dataType)
+    for rows in (batch, stream):
+        assert [convert(r[i]).timestamp() for r in rows] == want
+
+
 def test_lenient_json_read_quarantines_corrupt_lines(spark, tmp_path):
     """PERMISSIVE NDJSON ingest: well-formed lines parse, malformed lines
     land in the dead-letter frame with their raw text and source file —

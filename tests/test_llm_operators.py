@@ -1425,8 +1425,8 @@ def test_canary_cache_entries_survive_cap_pressure(spark):
     for i in range(similarity._PAIR_CACHE_MAX + 4):
         # flood keys carry the live session token like real keys do —
         # token-less keys would count as stale pins if ever pinned
-        similarity._pair_cache_put(("flood", tok, i), dummy)
-        dedup._cc_cache_put(("flood", tok, i), dummy)
+        similarity._PAIR_CACHE.put(("flood", tok, i), dummy, session_token=tok)
+        dedup._CC_CACHE.put(("flood", tok, i), dummy, session_token=tok)
 
     # pinned entries survived the flood; unpinned population is bounded
     assert pinned_pair <= set(similarity._PAIR_CACHE)
