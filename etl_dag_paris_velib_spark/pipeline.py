@@ -11,19 +11,22 @@ then ingest and a partitioned-parquet write. An hourly run writes about
 codegen compile, a write job and its commit) are most of the run. So each
 branch first takes the driver path: :data:`BRANCH_INGEST` parses the bronze
 envelope on the driver into one Arrow table with the exact types and rows of
-the branch's Spark plan (:mod:`.sources.driver_ingest`), and
+the branch's Spark plan (:mod:`.sources.driver_ingest`: the station envelope
+in Arrow's C++ JSON reader and compute kernels, which release the GIL, the
+one-row weather envelope with stdlib ``json``), and
 :func:`write_partitioned_table` writes it with pyarrow into a hidden staging
 directory that then takes the partition's place — no Spark job. The driver
 path declines, before writing anything, any envelope outside the subset it
 converts exactly: a value without its declared JSON type, an int out of range,
-a duplicate key, ``NaN``, zero station rows, an empty ``weather`` array, a
-session time zone :mod:`zoneinfo` cannot resolve, and the other cases listed
-in :mod:`.sources.driver_ingest`. A declined branch runs :func:`branch_plan`,
-one lazy plan from bronze scan to partitioned-parquet sink, so Spark defines
-every such case, errors included; its ``rows_inserted`` comes from
-``df.observe``, measured during the sink write itself, not a second count()
-job. The two branches run concurrently from the same SparkSession (the
-reference needed Celery ``concurrency=2`` for this, etl_dag.py:320).
+a duplicate key, ``NaN``, zero station rows, a ``null`` inside a bike-type
+map, an empty ``weather`` array, a session time zone :mod:`zoneinfo` cannot
+resolve, and the other cases listed in :mod:`.sources.driver_ingest`. A
+declined branch runs :func:`branch_plan`, one lazy plan from bronze scan to
+partitioned-parquet sink, so Spark defines every such case, errors included;
+its ``rows_inserted`` comes from ``df.observe``, measured during the sink
+write itself, not a second count() job. The two branches run concurrently
+from the same SparkSession (the reference needed Celery ``concurrency=2``
+for this, etl_dag.py:320).
 
 Retry semantics: the reference's per-task retry can double-append on
 partial success (SURVEY §7); here a retry re-runs the branch's single

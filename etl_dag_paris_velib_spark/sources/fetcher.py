@@ -13,9 +13,10 @@ sandboxed test runs — everything downstream is exercised through
 
 from __future__ import annotations
 
-import json
+import contextlib
 import os
 import shutil
+import uuid
 from dataclasses import dataclass, field
 from datetime import datetime
 from typing import Protocol
@@ -57,12 +58,20 @@ class HttpFetcher:
     timeout_sec: int = 30
 
     def fetch_to_bronze(self, bronze_dir: str, name: str, ts: datetime) -> str:
+        """The response body, byte for byte, under the bronze zone. It is
+        written to a hidden name and renamed into place, so a failed
+        download leaves no bronze file and keeps an earlier one whole."""
         import urllib.request
 
-        req = urllib.request.Request(self.url, headers=self.headers)
-        with urllib.request.urlopen(req, timeout=self.timeout_sec) as resp:
-            payload = json.load(resp)
         dest = _bronze_path(bronze_dir, name, ts)
-        with open(dest, "w") as f:
-            json.dump(payload, f)
+        tmp = os.path.join(bronze_dir, f".{os.path.basename(dest)}.{uuid.uuid4().hex}")
+        req = urllib.request.Request(self.url, headers=self.headers)
+        try:
+            with urllib.request.urlopen(req, timeout=self.timeout_sec) as resp, open(tmp, "xb") as f:
+                shutil.copyfileobj(resp, f)
+            os.replace(tmp, dest)
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
+            raise
         return dest

@@ -211,6 +211,69 @@ def test_seeded_feed_hours_match_spark_path(spark, tmp_path):
         assert got["station_status"].rows_inserted == 1474
 
 
+def test_pretty_printed_feed_hour_equals_compact(spark, tmp_path):
+    hour = _load_feed()(str(tmp_path / "feed"), 11).next_hour()
+    with open(hour.station_path) as f:
+        pretty = envelope_file(tmp_path / "pretty", "station_status", json.dumps(json.load(f), indent=2))
+    ts = datetime.fromtimestamp(hour.run_ts, timezone.utc)
+    compact = pipeline.BRANCH_INGEST["station_status"](spark, hour.station_path, ts)
+    got = pipeline.BRANCH_INGEST["station_status"](spark, pretty, ts)
+    assert got is not None and got.rows == 1474
+    assert got.table.equals(compact.table)
+
+
+def test_escaped_strings_match_spark_path(spark, tmp_path):
+    codes = ["é", "\U0001f600", 'a"b\\c/', "\u0000\t", "Hôtel"]
+    stations = [_station(station_id=i, stationCode=c) for i, c in enumerate(codes)]
+    for ensure_ascii in (True, False):
+        text = json.dumps({"ttl": 1, "data": {"stations": stations}}, ensure_ascii=ensure_ascii)
+        p = envelope_file(tmp_path / f"in{ensure_ascii}", "station_status", text)
+        work = tmp_path / f"out{ensure_ascii}"
+        assert run_both(spark, work, {"station_status": p})["station_status"].rows_inserted == 5
+
+
+def _python_calls(fn) -> int:
+    """Python function calls made while ``fn()`` runs."""
+    calls = 0
+
+    def profile(frame, event, arg):
+        nonlocal calls
+        calls += event == "call"
+
+    gc.collect()
+    gc.disable()  # a collection may run finalizers, which are calls too
+    sys.setprofile(profile)
+    try:
+        fn()
+    finally:
+        sys.setprofile(None)
+        gc.enable()
+    return calls
+
+
+def test_station_parse_has_no_python_work_per_row(spark, tmp_path):
+    """The station branch's Python calls do not grow with its rows."""
+    hour = _load_feed()(str(tmp_path / "feed"), 13).next_hour()
+    ts = datetime.fromtimestamp(hour.run_ts, timezone.utc)
+    with open(hour.station_path) as f:
+        env = json.load(f)
+    env["data"]["stations"] = env["data"]["stations"][:10]
+    small = envelope_file(tmp_path / "small", "station_status", json.dumps(env))
+    ingest = pipeline.BRANCH_INGEST["station_status"]
+    counts = {}
+    for name, path in (("10", small), ("1474", hour.station_path)):
+        ingest(spark, path, ts)  # first-call work (imports, caches) is not per row
+        batch = None
+
+        def call():
+            nonlocal batch
+            batch = ingest(spark, path, ts)
+
+        counts[name] = _python_calls(call)
+        assert batch is not None and batch.rows == int(name)
+    assert abs(counts["10"] - counts["1474"]) <= 5, counts
+
+
 def test_edge_stations_match_spark_path(spark, tmp_path):
     stations = EDGE_STATIONS + [None, {"station_id": 9}, {"last_reported": 5}]
     p = envelope_file(tmp_path / "in", "station_status", station_envelope(stations))
@@ -456,6 +519,37 @@ DECLINED = {
     "empty-weather-array": ("weather", _weather(weather=[])),
     "pressure-cast-overflow": ("weather", _weather(pressure=2**40)),
     "bom": ("weather", "﻿" + _weather()),
+    # blind spots of Arrow's JSON reader, which reads the station envelope
+    "null-bike-count-repeated": (
+        "station_status",
+        station_envelope([_station(num_bikes_available_types=[{"mechanical": None}, {"mechanical": 1}])]),
+    ),
+    "null-bike-count-after-bracket-key": (
+        "station_status",
+        station_envelope([_station(num_bikes_available_types=[{"a]: [": 1, "mechanical": None}, {"mechanical": 1}])]),
+    ),
+    "repeated-other-bike-type": (
+        "station_status",
+        station_envelope([_station(num_bikes_available_types=[{"other": 1}, {"other": 2}])]),
+    ),
+    "bom-station": ("station_status", "﻿" + station_envelope([_station()])),
+    "two-envelopes": ("station_status", station_envelope([_station()]) + "\n" + station_envelope([_station()])),
+    "escaped-repeated-bike-type": (
+        "station_status",
+        station_envelope([_station(num_bikes_available_types=[{"ebike": 1}, {"EBIKE": 2}])]).replace(
+            '"EBIKE"', '"\\u0065bike"'
+        ),
+    ),
+    "escaped-duplicate-key": (
+        "station_status",
+        station_envelope([_station(num_bikes_available_types=[{"ebike": 1, "EBIKE": 2}])]).replace(
+            '"EBIKE"', '"\\u0065bike"'
+        ),
+    ),
+    "infinity-undeclared": (
+        "station_status",
+        station_envelope([_station(x=0.5)]).replace('"x": 0.5', '"x": Infinity'),
+    ),
 }
 
 

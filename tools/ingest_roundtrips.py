@@ -1,8 +1,8 @@
 """Driver-side cost of each hourly ingest branch, on both of its paths.
 
 For each branch of ``pipeline.BRANCH_INGEST`` this prints three JSON lines,
-from one seeded hour of ``perfbench/feed.py`` (1,474 station rows, one
-weather row):
+then one for both branches together, from one seeded hour of
+``perfbench/feed.py`` (1,474 station rows, one weather row):
 
 - ``"path": "driver"``, the path ``pipeline.run_branch`` takes, once for a
   table named by a plain path (``"table": "plain"``) and once for the same
@@ -10,9 +10,15 @@ weather row):
   median wall time of the ingest (parse and convert, ``BRANCH_INGEST[name]``)
   and of the write (``write_partitioned_table`` of the batch, one new hourly
   partition per rep), and the py4j round trips (Python-to-JVM calls) each
-  makes. A plain path is written with Python file I/O (one round trip, the
-  Spark version); a ``file://`` one through the Hadoop FileSystem API, whose
-  local filesystem forks ``chmod`` for each file and directory it creates.
+  makes on its own thread (py4j's thread that releases collected JVM
+  objects is not counted). A plain path is written with Python file I/O
+  (one round trip, the Spark version); a ``file://`` one through the Hadoop
+  FileSystem API, whose local filesystem forks ``chmod`` for each file and
+  directory it creates.
+- ``"path": "driver_concurrent"``, the last line: the median wall time of both
+  ``BRANCH_INGEST`` calls run on two threads, as ``pipeline.run_pipeline``
+  runs its branches, so the share of the op the two parses spend waiting
+  on each other (for the GIL) shows beside the single-branch times.
 - ``"path": "spark_plan"``, the plan a declined envelope runs
   (``pipeline.branch_plan``: ingest, ``observe``, partition columns), built
   without executing it: round trips, median build time and the ``Project``
@@ -33,7 +39,9 @@ import re
 import statistics
 import sys
 import tempfile
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timedelta, timezone
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -73,9 +81,11 @@ def main() -> None:
     send = client.send_command
     calls = 0
 
+    measuring = threading.get_ident()
+
     def counting_send(*a, **k):
         nonlocal calls
-        calls += 1
+        calls += threading.get_ident() == measuring
         return send(*a, **k)
 
     def measured(fn):
@@ -152,6 +162,27 @@ def main() -> None:
                     ),
                     flush=True,
                 )
+            with ThreadPoolExecutor(max_workers=len(bronze)) as pool:
+                both = []
+                for i in range(args.reps + 1):
+                    ts = run_ts + timedelta(hours=i)
+                    t0 = time.perf_counter()
+                    futures = [
+                        pool.submit(pipeline.BRANCH_INGEST[name], spark, bronze[name], ts)
+                        for name in pipeline.BRANCH_INGEST
+                    ]
+                    assert all(f.result() is not None for f in futures)
+                    both.append(time.perf_counter() - t0)
+            print(
+                json.dumps(
+                    {
+                        "branch": "+".join(pipeline.BRANCH_INGEST),
+                        "path": "driver_concurrent",
+                        "ingest_ms_p50": ms_p50(both[1:]),
+                    }
+                ),
+                flush=True,
+            )
     finally:
         client.send_command = send
         spark.stop()
