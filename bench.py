@@ -64,7 +64,8 @@ def main():
     sf = float(m.group(1)) if m else None
 
     # no console progress bars: their \r-rewritten lines were interleaved
-    # around the result line in the driver-captured output (BENCH_r03).
+    # around the result line in the driver-captured output, which the
+    # driver then could not parse.
     # Driver memory is honored here because this process launches the JVM;
     # the 1g default holds at sf0.1 but larger SF_DIRs (e.g. the .scale/
     # sf1.0 replica) grow 64MB-threshold broadcast sides past it.
@@ -173,8 +174,8 @@ def main():
                 regressions[name] = {"sec": t, "budget": budgets.get(name)}
 
     # The driver stores only a bounded tail of this process's output and
-    # parses the JSON line out of it (BENCH_r03.json came back parsed:null
-    # when the 66-query line outgrew that window). Keep the line compact:
+    # parses the JSON line out of it (a 66-query line outgrew that window
+    # and came back unparsed). Keep the line compact:
     # short query keys (name up to the first "_" — q01, q11b, ... — unique
     # by construction) and 2-decimal seconds. The leading newline guards
     # against console-progress carriage returns sharing the line.
@@ -203,8 +204,8 @@ def main():
 def render_line(total, short, sf, regressions, limit=1800):
     """Render the one-line JSON summary, guaranteed to fit the driver's
     bounded output tail: if the full per-query map would overflow
-    ``limit`` chars (the ~2000-char window minus headroom; BENCH_r03
-    came back parsed:null when a 66-query line outgrew it), drop the
+    ``limit`` chars (the ~2000-char window minus headroom; a 66-query
+    line once outgrew it and came back unparsed), drop the
     FASTEST entries — the least informative ones — and say how many were
     dropped via "queries_omitted". The slow queries the judge actually
     compares always survive."""

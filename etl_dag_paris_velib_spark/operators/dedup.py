@@ -99,6 +99,12 @@ _CC_CACHE = PlanCache(_CC_CACHE_MAX)
 clear_cc_cache = _CC_CACHE.clear
 
 
+#: rows per partition of a fixpoint's per-round edge scan: 1M rows is
+#: tens of MB of (key, src, dst) longs, the partition-size band for an
+#: in-memory hash-join probe side (see _iterate_scan_partitions)
+CC_ROWS_PER_PARTITION = 1 << 20
+
+
 def _iterate_scan_partitions(n_rows: int) -> int:
     """Partition count for the per-round scan of a fixpoint's persisted
     edge frame, derived from its ROW COUNT (r13; guide §2.2 — make
@@ -118,62 +124,44 @@ def _iterate_scan_partitions(n_rows: int) -> int:
     count inherited from the core count instead of the data.
 
     The fix is a narrow ``coalesce(ceil(n_rows / target))`` over the
-    cache: rows-per-partition ``target`` is env-tunable
-    (SPARK_GRAFT_CC_ROWS_PER_PARTITION, default 1M rows ~ tens of MB of
-    (tag, src, dst) longs — the guide's §2.2 partition-size band for an
-    in-memory hash-join probe side). No upper clamp is needed:
-    ``coalesce`` never INCREASES partition count, so a 100 TB edge list
-    whose ceil(n/target) exceeds its existing partitioning keeps that
-    partitioning unchanged — small graphs merge, big graphs are
-    untouched, and nothing is pinned to the local core count."""
-    import os
-
-    target = int(
-        os.environ.get("SPARK_GRAFT_CC_ROWS_PER_PARTITION", str(1 << 20))
-    )
-    return max(1, -(-n_rows // target))
+    cache, with ``target`` = :data:`CC_ROWS_PER_PARTITION`. No upper
+    clamp is needed: ``coalesce`` never INCREASES partition count, so a
+    100 TB edge list whose ceil(n/target) exceeds its existing
+    partitioning keeps that partitioning unchanged — small graphs merge,
+    big graphs are untouched, and nothing is pinned to the local core
+    count."""
+    return max(1, -(-n_rows // CC_ROWS_PER_PARTITION))
 
 
-def near_dup_components(
+def _min_label_components(
     pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iterations: int = 20,
-    method: str = "label",
-    pin: bool = False,
+    keys: list[str],
+    id_a: str,
+    id_b: str,
+    max_iterations: int,
+    pin: bool,
 ) -> DataFrame:
-    """Connected components over near-duplicate pairs: every doc in a
-    cluster gets ``component`` = the smallest doc id reachable from it.
-    The canonicalization step after any pairwise near-dup join — keep one
-    doc per COMPONENT, not per pair (pairs are not transitive-closed:
-    A~B, B~C must collapse A,B,C together even when A~C was never
-    emitted).
+    """Min-label propagation to fixpoint over the graph(s) in ``pairs``;
+    returns ``(*keys, doc_id, component)``. ``keys`` names the columns
+    that separate independent graphs: ``[]`` for one graph, ``[tag]``
+    for :func:`near_dup_components_multi`. Every operator below keys on
+    ``(*keys, id)`` and none mixes key values, so per key value the label
+    evolution is row-for-row the single-graph recurrence. With
+    ``keys=[]`` the plan is the single-graph one: no extra column, and
+    the label side's re-aliasing projection is an identity that the
+    optimizer removes.
 
-    ``method="label"`` (default): min-label propagation to fixpoint —
-    each node repeatedly adopts the smallest label among itself and its
-    neighbors. Iterations are bounded by the cluster DIAMETER (near-dup
-    clusters are shallow; 20 covers any real corpus). Each round is one
-    join + one groupBy on the edge list — no driver-side graph.
-
-    ``method="star"``: alternating large-star/small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    converges in O(log²) rounds regardless of diameter, the right choice
-    for high-diameter graphs (chains of chunk-shifted near-dups) and the
-    100 TB default. Differential-tested against the label method in
-    tests/test_llm_operators.py, including a chain graph where label
-    propagation's round budget blows up and star converges.
-
-    Returns (doc_id, component) for every doc appearing in any pair.
-    """
+    Results are cached per (session, input plan, keys, params) in
+    ``_CC_CACHE``."""
     try:
         tok = session_token(pairs.sparkSession)
         cache_key = (
             "cc",
             tok,
             pairs.semanticHash(),
+            tuple(keys),
             id_a,
             id_b,
-            method,
             max_iterations,
         )
     except Exception:
@@ -182,13 +170,6 @@ def near_dup_components(
     if cached is not None:
         return cached
 
-    if method == "star":
-        out = _components_star(pairs, id_a, id_b, max_iterations)
-        if cache_key is not None:
-            _CC_CACHE.put(cache_key, out, pin=pin, session_token=tok)
-        return out
-    if method != "label":
-        raise ValueError(f"unknown method: {method!r} (label | star)")
     # symmetric edge list + self-loops seed the labels. Symmetrization
     # is an EXPLODE of both orientations from one scan, not a
     # self-union: union(pairs, reversed(pairs)) embeds the pairs
@@ -198,6 +179,7 @@ def near_dup_components(
     # materialization (guide §2.3 — compute once, fan out rows).
     edges = (
         pairs.select(
+            *keys,
             F.explode(
                 F.array(
                     F.struct(
@@ -207,9 +189,9 @@ def near_dup_components(
                         F.col(id_b).alias("src"), F.col(id_a).alias("dst")
                     ),
                 )
-            ).alias("e")
+            ).alias("e"),
         )
-        .select("e.src", "e.dst")
+        .select(*keys, "e.src", "e.dst")
         .distinct()
         .persist()
     )
@@ -225,9 +207,9 @@ def near_dup_components(
     # 8.9 -> 2.9 s at sf0.1 with identical labels. Storage is released
     # when the reference is GC'd (the _CC_CACHE entry note).
     labels = (
-        edges.select("src")
+        edges.select(*keys, "src")
         .distinct()
-        .select(F.col("src").alias("id"), F.col("src").alias("label"))
+        .select(*keys, F.col("src").alias("id"), F.col("src").alias("label"))
         .localCheckpoint(eager=False)
     )
     # labels only ever decrease, so "no row changed this round" is the
@@ -262,7 +244,7 @@ def near_dup_components(
     # near-dup clusters converge in 2 rounds, so the extra join per
     # round cost more than the rounds it could save.
     edges_self = edges.unionByName(
-        labels.select(F.col("id").alias("src"), F.col("id").alias("dst"))
+        labels.select(*keys, F.col("id").alias("src"), F.col("id").alias("dst"))
     ).localCheckpoint(eager=False)
     # ONE count materializes the checkpoints (the union's branches read
     # edges' cache and compute labels) — round 1 paid exactly this
@@ -278,36 +260,77 @@ def near_dup_components(
     scan = edges_self.coalesce(nparts)
     edges.unpersist()
     labels = labels.coalesce(nparts)
+    # the label side's keys are RE-ALIASED per join: round 1's labels
+    # lineage is embedded inside edges_self (the self-loop union
+    # branch), so a key column NAME on both sides would be ambiguous
+    # under Spark's dataset-id self-join check. `id` and `label` exist
+    # only on the label side, so they keep their names.
+    lkeys = {k: "_l_" + k for k in keys}
+    on = F.col("dst") == F.col("id")
+    for k, lk in lkeys.items():
+        on = on & (F.col(k) == F.col(lk))
     for _ in range(max_iterations):
+        lab = labels.select(
+            *[F.col(k).alias(lk) for k, lk in lkeys.items()], "id", "label"
+        )
         stepped = (
-            scan.join(labels, scan.dst == labels.id)
-            .groupBy("src")
+            scan.join(lab, on)
+            .groupBy(*keys, "src")
             .agg(
                 F.min(
                     F.when(F.col("dst") == F.col("src"), F.col("label"))
                 ).alias("_old"),
                 F.min("label").alias("label"),
             )
-            .select(F.col("src").alias("id"), "_old", "label")
+            .select(*keys, F.col("src").alias("id"), "_old", "label")
             .localCheckpoint(eager=False)  # truncates lineage; caches on
             # first action (the count below), costing zero extra jobs
         )
         n_changed = stepped.filter(F.col("label") != F.col("_old")).count()
-        labels = stepped.select("id", "label")
+        labels = stepped.select(*keys, "id", "label")
         if n_changed == 0:
             break
     else:
         # exiting without the break = non-fixpoint: some cluster's diameter
         # exceeds the budget and its labels are WRONG, not approximate
         raise RuntimeError(
-            f"near_dup_components did not converge in {max_iterations} "
-            "iterations — raise max_iterations (diameter exceeds budget) "
-            "or use method='star' (diameter-independent)"
+            f"connected components did not converge in {max_iterations} "
+            "iterations: a component's diameter exceeds the budget — "
+            "raise max_iterations"
         )
-    out = labels.select(F.col("id").alias("doc_id"), F.col("label").alias("component"))
+    out = labels.select(
+        *keys, F.col("id").alias("doc_id"), F.col("label").alias("component")
+    )
     if cache_key is not None:
         _CC_CACHE.put(cache_key, out, pin=pin, session_token=tok)
     return out
+
+
+def near_dup_components(
+    pairs: DataFrame,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+    max_iterations: int = 20,
+    pin: bool = False,
+) -> DataFrame:
+    """Connected components over near-duplicate pairs: every doc in a
+    cluster gets ``component`` = the smallest doc id reachable from it.
+    The canonicalization step after any pairwise near-dup join — keep one
+    doc per COMPONENT, not per pair (pairs are not transitive-closed:
+    A~B, B~C must collapse A,B,C together even when A~C was never
+    emitted).
+
+    Min-label propagation to fixpoint: each node repeatedly adopts the
+    smallest label among itself and its neighbors. Iterations are
+    bounded by the cluster DIAMETER (near-dup clusters are shallow; 20
+    covers any real corpus); a graph whose diameter exceeds
+    ``max_iterations`` raises rather than return wrong labels. Each
+    round is one join + one groupBy on the edge list — no driver-side
+    graph.
+
+    Returns (doc_id, component) for every doc appearing in any pair.
+    """
+    return _min_label_components(pairs, [], id_a, id_b, max_iterations, pin)
 
 
 def near_dup_components_multi(
@@ -316,7 +339,6 @@ def near_dup_components_multi(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 20,
-    pin: bool = False,
 ) -> DataFrame:
     """Connected components over SEVERAL independent pair graphs in ONE
     fixpoint loop: ``tagged_pairs`` carries a ``tag_col`` column naming
@@ -335,113 +357,16 @@ def near_dup_components_multi(
     (`beam` as a frontier column) — runs ONE loop in
     max(per-graph rounds) iterations over the union.
 
-    EQUIVALENCE: every key below is ``(tag, id)`` and no operator mixes
-    tags — the edge join matches on tag, the groupBy groups by tag, the
-    self-loop rows carry their tag — so for a fixed tag the label
-    evolution is row-for-row the single-graph recurrence; the only
-    shared thing is the fixpoint TEST (max over tags of per-graph
-    rounds), and extra rounds past a graph's own fixpoint are identity
-    on its labels (min over an unchanged frontier). Pinned by
-    tests/test_llm_operators.py's multi-vs-single differential.
+    EQUIVALENCE: every key is ``(tag, id)`` and no operator mixes tags
+    (see :func:`_min_label_components`), so the only shared thing is the
+    fixpoint TEST (max over tags of per-graph rounds), and extra rounds
+    past a graph's own fixpoint are identity on its labels (min over an
+    unchanged frontier). Pinned by tests/test_llm_operators.py's
+    multi-vs-single differential.
     """
-    try:
-        tok = session_token(tagged_pairs.sparkSession)
-        cache_key = (
-            "cc-multi",
-            tok,
-            tagged_pairs.semanticHash(),
-            tag_col,
-            id_a,
-            id_b,
-            max_iterations,
-        )
-    except Exception:
-        cache_key = None
-    cached = _CC_CACHE.get(cache_key, pin=pin)
-    if cached is not None:
-        return cached
-
-    tag = F.col(tag_col).alias("tag")
-    edges = (
-        tagged_pairs.select(
-            tag,
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(id_b).alias("src"), F.col(id_a).alias("dst")
-                    ),
-                )
-            ).alias("e"),
-        )
-        .select("tag", "e.src", "e.dst")
-        .distinct()
-        .persist()
+    return _min_label_components(
+        tagged_pairs, [tag_col], id_a, id_b, max_iterations, pin=False
     )
-    # localCheckpoint + sizing count + narrow coalesce, exactly as in
-    # near_dup_components — see the comments there for the measured
-    # lineage-reanalysis and fragmentation numbers (both measured on
-    # THIS caller's graphs, q154)
-    labels = (
-        edges.select("tag", "src")
-        .distinct()
-        .select("tag", F.col("src").alias("id"), F.col("src").alias("label"))
-        .localCheckpoint(eager=False)
-    )
-    edges_self = edges.unionByName(
-        labels.select("tag", F.col("id").alias("src"), F.col("id").alias("dst"))
-    ).localCheckpoint(eager=False)
-    nparts = _iterate_scan_partitions(edges_self.count())
-    scan = edges_self.coalesce(nparts)
-    edges.unpersist()
-    labels = labels.coalesce(nparts)
-    for _ in range(max_iterations):
-        # the label side is RE-ALIASED per join (ltag/lid): round 1's
-        # labels lineage is embedded inside edges_self (the self-loop
-        # union branch), so unaliased references would be ambiguous
-        # under Spark's dataset-id self-join check — the single-graph
-        # version dodges this only because its join touches no shared
-        # column NAME; here `tag` is on both sides
-        lab = labels.select(
-            F.col("tag").alias("ltag"),
-            F.col("id").alias("lid"),
-            "label",
-        )
-        stepped = (
-            scan.join(
-                lab,
-                (F.col("tag") == F.col("ltag"))
-                & (F.col("dst") == F.col("lid")),
-            )
-            .groupBy("tag", "src")
-            .agg(
-                F.min(
-                    F.when(F.col("dst") == F.col("src"), F.col("label"))
-                ).alias("_old"),
-                F.min("label").alias("label"),
-            )
-            .select("tag", F.col("src").alias("id"), "_old", "label")
-            .localCheckpoint(eager=False)
-        )
-        n_changed = stepped.filter(F.col("label") != F.col("_old")).count()
-        labels = stepped.select("tag", "id", "label")
-        if n_changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"near_dup_components_multi did not converge in {max_iterations}"
-            " iterations — raise max_iterations (diameter exceeds budget)"
-        )
-    out = labels.select(
-        F.col("tag").alias(tag_col),
-        F.col("id").alias("doc_id"),
-        F.col("label").alias("component"),
-    )
-    if cache_key is not None:
-        _CC_CACHE.put(cache_key, out, pin=pin, session_token=tok)
-    return out
 
 
 def near_dup_purge(
@@ -450,18 +375,17 @@ def near_dup_purge(
     id_col: str = "doc_id",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    method: str = "label",
 ) -> DataFrame:
     """Materialize the DEDUPLICATED corpus: the transform a pipeline
     actually runs after pairwise near-dup detection (q21) and cluster
     canonicalization (q42). Survivor rule: each connected component
     keeps its smallest-id member (the component label from
-    :func:`near_dup_components` IS that id under min-label/star
+    :func:`near_dup_components` IS that id under min-label
     propagation), every other cluster member is dropped, and docs that
     appear in no pair pass through untouched.
 
-    Plan: components over the pair graph (bounded by cluster diameter /
-    O(log^2) rounds for ``method="star"``), a loser list of
+    Plan: components over the pair graph (rounds bounded by cluster
+    diameter), a loser list of
     O(|cluster members|) ids — corpus-SUBLINEAR, since near-dup
     clusters are a small fraction of a crawl — then ONE left-anti join
     of the corpus against it. At 100 TB the loser side broadcasts when
@@ -470,7 +394,7 @@ def near_dup_purge(
     a text column. Keep-min is deterministic, so reruns are idempotent
     (the r08 incremental-dedup family's requirement).
     """
-    comp = near_dup_components(pairs, id_a=id_a, id_b=id_b, method=method)
+    comp = near_dup_components(pairs, id_a=id_a, id_b=id_b)
     losers = comp.filter(F.col("doc_id") != F.col("component")).select(
         F.col("doc_id").alias(id_col)
     )
@@ -490,7 +414,6 @@ def incremental_near_dup_purge(
     base_hashes: DataFrame | None = None,
     delta_bands: DataFrame | None = None,
     delta_hashes: DataFrame | None = None,
-    method: str = "label",
 ) -> DataFrame:
     """Per-increment dedup admission: which DELTA docs enter the kept
     corpus. The daily-crawl companion of :func:`near_dup_purge` — the
@@ -560,113 +483,11 @@ def incremental_near_dup_purge(
         delta_bands=delta_bands,
         delta_hashes=delta_hashes,
     )
-    comp = near_dup_components(pairs, method=method)
+    comp = near_dup_components(pairs)
     losers = comp.filter(F.col("doc_id") != F.col("component")).select(
         F.col("doc_id").alias(id_col)
     )
     return delta.join(losers, on=id_col, how="left_anti")
-
-
-def _components_star(
-    pairs: DataFrame,
-    id_a: str,
-    id_b: str,
-    max_iterations: int,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components.
-
-    One round = large-star then small-star, each a groupBy-min plus a
-    re-keyed projection of the symmetric edge list:
-
-    - large-star(u): every neighbor v > u re-attaches to
-      m = min(Γ(u) ∪ {u});
-    - small-star(u): every neighbor v <= u, and u itself, re-attaches
-      to m.
-
-    Both steps strictly shrink a potential over edge endpoints, and the
-    alternation converges to a star forest whose centers are the
-    component minima in O(log²) rounds (Kiveris et al.) — independent of
-    graph diameter, unlike label propagation. Fixpoint = the canonical
-    edge SET is unchanged (count + empty anti-join: exact, no arithmetic
-    to overflow).
-    """
-
-    def _sym(e: DataFrame) -> DataFrame:
-        # explode, not self-union: one scan of e per symmetrization (the
-        # star rounds' e is an unpersisted projection — see the label
-        # method's edges note)
-        return (
-            e.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("src"), F.col("dst")),
-                        F.struct(
-                            F.col("dst").alias("src"),
-                            F.col("src").alias("dst"),
-                        ),
-                    )
-                ).alias("e")
-            )
-            .select("e.src", "e.dst")
-        )
-
-    def _star(e: DataFrame, large: bool) -> DataFrame:
-        s = _sym(e)
-        m = (
-            s.groupBy("src")
-            .agg(F.min("dst").alias("_mn"))
-            .select("src", F.least("src", "_mn").alias("_m"))
-        )
-        joined = s.join(m, "src")
-        if large:
-            out = joined.filter(F.col("dst") > F.col("src")).select(
-                F.col("dst").alias("src"), F.col("_m").alias("dst")
-            )
-        else:
-            out = joined.filter(F.col("dst") <= F.col("src")).select(
-                F.col("dst").alias("src"), F.col("_m").alias("dst")
-            ).unionByName(m.select("src", F.col("_m").alias("dst")))
-        return out.filter(F.col("src") != F.col("dst")).distinct()
-
-    nodes = (
-        pairs.select(F.col(id_a).alias("id"))
-        .unionByName(pairs.select(F.col(id_b).alias("id")))
-        .distinct()
-        .persist()
-    )
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
-    for _ in range(max_iterations):
-        # localCheckpoint: one round's plan is ~8 operators; without
-        # truncation the per-round plan would grow geometrically
-        new_edges = _star(_star(edges, large=True), large=False).localCheckpoint()
-        n_new = new_edges.count()
-        unchanged = (
-            n_new == edges.count()
-            and new_edges.join(edges, ["src", "dst"], "left_anti").isEmpty()
-        )
-        edges.unpersist()
-        edges = new_edges
-        if unchanged:
-            break
-    else:
-        edges.unpersist()
-        nodes.unpersist()
-        raise RuntimeError(
-            f"star components did not converge in {max_iterations} rounds"
-        )
-    # star forest: every non-center node has exactly one edge to its
-    # center (= component min); centers label themselves
-    labeled = nodes.join(edges, nodes.id == edges.src, "left").select(
-        F.col("id").alias("doc_id"),
-        F.coalesce("dst", "id").alias("component"),
-    )
-    nodes.unpersist()
-    return labeled
 
 
 def bow_fingerprint(text_col) -> Column:

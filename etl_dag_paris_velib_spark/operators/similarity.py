@@ -32,9 +32,7 @@ when evicted. The shingle/hash intermediates the pair operators
 when the caller is done with the returned DataFrame, so they stay cached
 until ``spark.catalog.clearCache()`` (which ``clear_plan_caches(spark)``
 runs) or the session ends. Long-lived sessions running many operator
-instances should clear between phases, or pass
-``persist_intermediate=False`` to trade recompute for zero cache
-footprint.
+instances should call ``clear_plan_caches(spark)`` between phases.
 """
 
 from __future__ import annotations
@@ -384,7 +382,7 @@ def edit_distance_pairs(
     never all-pairs — levenshtein is O(len^2) per pair, affordable only on
     the LSH-pruned candidate set."""
     # shingles feed only the signature chain here (verify reads raw text),
-    # so never persist them regardless of persist_intermediate
+    # so never persist them
     _, cand = _minhash_candidates(
         df, id_col, text_col, k, bands, shingle_n, persist_shingles=False
     )
@@ -423,7 +421,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    persist_intermediate: bool = True,
     pin: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, exact Jaccard >= threshold).
@@ -443,38 +440,35 @@ def minhash_lsh_pairs(
     candidate pairs, which is the set that must be small for LSH to make
     sense at all.
     """
-    cache_key = None
-    if persist_intermediate:
-        # materialized-subplan reuse: the verified pair set is a common
-        # subplan of several downstream operators (q21 emits it, q42
-        # clusters it), so a second call with a semantically identical
-        # input and the same parameters returns the SAME persisted
-        # DataFrame instead of recomputing signatures + verify — the
-        # DataFrame-level analogue of a materialized view. Keyed by the
-        # session and the input's semantic hash (Catalyst's normalized
-        # plan digest), so a changed input or session misses. Bounded
-        # LRU; evicted entries are unpersisted.
-        try:
-            tok = session_token(df.sparkSession)
-            cache_key = (
-                tok,
-                _content_fingerprint(df),
-                id_col,
-                text_col,
-                k,
-                bands,
-                shingle_n,
-                threshold,
-            )
-        except Exception:
-            cache_key = None
-        cached = _PAIR_CACHE.get(cache_key, pin=pin)
-        if cached is not None:
-            return cached
+    # materialized-subplan reuse: the verified pair set is a common
+    # subplan of several downstream operators (q21 emits it, q42
+    # clusters it), so a second call with a semantically identical
+    # input and the same parameters returns the SAME persisted
+    # DataFrame instead of recomputing signatures + verify — the
+    # DataFrame-level analogue of a materialized view. Keyed by the
+    # session and the input's semantic hash (Catalyst's normalized
+    # plan digest), so a changed input or session misses. Bounded
+    # LRU; evicted entries are unpersisted.
+    try:
+        tok = session_token(df.sparkSession)
+        cache_key = (
+            tok,
+            _content_fingerprint(df),
+            id_col,
+            text_col,
+            k,
+            bands,
+            shingle_n,
+            threshold,
+        )
+    except Exception:
+        cache_key = None
+    cached = _PAIR_CACHE.get(cache_key, pin=pin)
+    if cached is not None:
+        return cached
 
     sigh, cand = _minhash_candidates(
-        df, id_col, text_col, k, bands, shingle_n, persist_intermediate,
-        pin=pin,
+        df, id_col, text_col, k, bands, shingle_n, persist_shingles=True, pin=pin
     )
     sigh = sigh.select("id", "hs")
 
@@ -507,91 +501,13 @@ def minhash_lsh_pairs(
     return verified
 
 
-def _prefix_filtered_jaccard(
-    hsh: DataFrame, threshold: float, max_df: int | None
-) -> DataFrame:
-    """AllPairs/PPJoin candidate generation + exact verify (see
-    :func:`ngram_jaccard_pairs` ``prefix_filter`` docs for the theory).
-    ``hsh`` is the (id, hs) hashed-shingle-set table; token order is the
-    60-bit hash value ascending (any fixed global order preserves
-    exactness; df-ascending would prune harder but costs an extra
-    df-join per token — hash order is free)."""
-    base = hsh.select(
-        "id",
-        F.array_sort("hs").alias("hs_sorted"),
-        F.size("hs").alias("n_sh"),
-    )
-    # prefix length |A| - ceil(t*|A|) + 1 (>= 1 for non-empty sets).
-    # Both prunes are made CONSERVATIVE against double rounding: ceil is
-    # taken on t*n - 1e-9 so a product whose double value rounds a hair
-    # ABOVE a mathematically-integer t*n cannot shorten the prefix (a
-    # slightly longer prefix only costs pruning power, never pairs), and
-    # the length filter below gets the symmetric + 1e-9 slack. Set sizes
-    # are document-bounded (<< 1e6 shingles), so accumulated rounding is
-    # orders of magnitude under the epsilon — the "EXACT, bit-identical
-    # output" guarantee holds for arbitrary thresholds, not just the
-    # friendly ones (tested against exact Fraction arithmetic).
-    pref_len = (
-        F.col("n_sh")
-        - F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
-        + F.lit(1)
-    ).cast("int")
-    inv = base.select(
-        "id",
-        "n_sh",
-        F.explode(F.slice("hs_sorted", 1, pref_len)).alias("s"),
-    )
-    if max_df is not None:
-        hubs = (
-            inv.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_df)
-            .select("s")
-        )
-        inv = inv.join(F.broadcast(hubs), "s", "left_anti")
-    a, b = inv.alias("a"), inv.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.id") < F.col("b.id"))
-            # length filter: J <= min/max, so t*max <= min is necessary;
-            # + 1e-9 slack keeps boundary-size pairs when t*max rounds
-            # just above an integer min (see the pref_len note)
-            & (
-                F.lit(threshold) * F.greatest("a.n_sh", "b.n_sh")
-                <= F.least("a.n_sh", "b.n_sh") + F.lit(1e-9)
-            ),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    sa = base.select(F.col("id").alias("id_a"), F.col("hs_sorted").alias("ha"))
-    sb = base.select(F.col("id").alias("id_b"), F.col("hs_sorted").alias("hb"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("ha", "hb"))
-                / F.size(F.array_union("ha", "hb"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
     threshold: float = 0.5,
-    persist_intermediate: bool = True,
     max_df: int | None = None,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """Exact n-gram-Jaccard join via shingle-inverted-index — the
     ground-truth companion to :func:`minhash_lsh_pairs` (used by tests to
@@ -615,37 +531,9 @@ def ngram_jaccard_pairs(
     and recall is unchanged whenever near-dup pairs share at least one
     sub-hub shingle (tests/test_llm_operators.py quantifies this on the
     planted pairs).
-
-    ``prefix_filter=True`` switches to the AllPairs/PPJoin prefix-index
-    construction (Bayardo et al. WWW'07; Xiao et al. ICDE'08), which is
-    EXACT — bit-identical output — while shrinking the inverted index
-    and its self-join quadratically: for Jaccard >= t, any qualifying
-    pair must share a token among the first ``|A| - ceil(t*|A|) + 1``
-    elements of each set under ANY fixed global token order (here: hash
-    value ascending), because J >= t implies ``|A∩B| >= ceil(t*|A|)``,
-    and missing the whole prefix caps the overlap at ``ceil(t*|A|)-1``.
-    Only prefixes are indexed (~(1-t) of all tokens), candidates must
-    collide on BOTH prefixes, and a length filter
-    (``t * max(|A|,|B|) <= min(|A|,|B|)``, since J <= min/max) prunes
-    before verification; survivors verify with one exact
-    array_intersect/array_union over the persisted hash sets. At t=0.5
-    the index self-join touches ~25% of the full-index pair volume; at
-    t=0.9, ~1%.
-
-    Measured honestly (sf1.0 dedup-stress, 50k docs with planted
-    10-replica clusters): identical 250,600 pairs from both paths, wall
-    time AT PARITY (~42s warm either way) — there, nearly every
-    candidate is a true near-dup, so the verify join costs what the
-    index join saved. The prefix path wins where candidate volume is
-    dominated by sub-threshold co-occurrence (boilerplate-rich crawls,
-    high thresholds): index volume shrinks ~(1-t)² while verification
-    stays proportional to TRUE pairs. Pick per corpus; both are exact.
     """
-    hsh = _hashed_shingle_sets(df, id_col, text_col, shingle_n)
-    if persist_intermediate:
-        hsh = hsh.persist()  # three consumers: sizes x2 + inverted index
-    if prefix_filter:
-        return _prefix_filtered_jaccard(hsh, threshold, max_df)
+    # three consumers: sizes x2 + inverted index
+    hsh = _hashed_shingle_sets(df, id_col, text_col, shingle_n).persist()
     sizes = hsh.select("id", F.size("hs").alias("n_sh"))
     inv = hsh.select("id", F.explode("hs").alias("s"))
     if max_df is not None:
@@ -685,8 +573,6 @@ def containment_pairs(
     shingle_n: int = 3,
     threshold: float = 0.8,
     min_shingles: int = 5,
-    max_df: int | None = None,
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """Asymmetric shingle-containment join: directed pairs where
     ``|A ∩ B| / |A| >= threshold`` — document A is (mostly) contained in
@@ -701,28 +587,16 @@ def containment_pairs(
     directions
     of every co-occurring pair and divides by the SOURCE side's set size
     only. Shuffles are identical to the Jaccard join (the direction flip
-    is a projection, not a new shuffle); ``max_df`` is the same hub-
-    shingle guard. ``min_shingles`` drops sources too small for the
+    is a projection, not a new shuffle). ``min_shingles`` drops sources too small for the
     containment ratio to be meaningful (a 1-shingle doc is "contained"
     everywhere its one shingle appears).
     """
-    hsh = _hashed_shingle_sets(df, id_col, text_col, shingle_n)
-    if persist_intermediate:
-        # same opt-out contract as ngram_jaccard_pairs: hsh feeds two
-        # consumers (sizes + inverted index); callers that run this in a
-        # loop (bench re-times) pass False to avoid accumulating block-
-        # manager entries across invocations.
-        hsh = hsh.persist()
+    # hsh feeds two consumers (sizes + inverted index); callers that run
+    # this in a loop (bench re-times) release the cached copies between
+    # invocations with clear_plan_caches(spark)
+    hsh = _hashed_shingle_sets(df, id_col, text_col, shingle_n).persist()
     sizes = hsh.select("id", F.size("hs").alias("n_sh"))
     inv = hsh.select("id", F.explode("hs").alias("s"))
-    if max_df is not None:
-        hubs = (
-            inv.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_df)
-            .select("s")
-        )
-        inv = inv.join(F.broadcast(hubs), "s", "left_anti")
     a, b = inv.alias("a"), inv.alias("b")
     inter = (
         a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
@@ -775,7 +649,6 @@ def simhash_pairs(
     band_bits: int = 15,
     n_bands: int = 4,
     max_hamming: int = 8,
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: candidates share at least one 15-bit band
     of the 60-bit hash; verified by Hamming distance <= max_hamming.
@@ -791,11 +664,10 @@ def simhash_pairs(
         # vectorized UDF — bit-identical to functions.text.simhash64
         simhash64_udf(F.array_distinct(tokens(F.col(text_col)))).alias("h"),
     )
-    if persist_intermediate:
-        # one long per doc; both sides of the band self-join read it.
-        # Same pandas-UDF-in-cache hazard as the minhash cand build
-        # (simhash64_udf sits in the persisted projection), same fix.
-        hashed = _persist_udf_cache(hashed)
+    # one long per doc; both sides of the band self-join read it.
+    # Same pandas-UDF-in-cache hazard as the minhash cand build
+    # (simhash64_udf sits in the persisted projection), same fix.
+    hashed = _persist_udf_cache(hashed)
     mask = (1 << band_bits) - 1
     band_arr = F.array(
         *[

@@ -202,7 +202,6 @@ def kmv_set_ops(
     set_col: str,
     key_col: str,
     k: int = 64,
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """Distinct-overlap estimation for every PAIR of sets from their KMV
     sketches (Beyer et al., "On Synopses for Distinct Value Estimation
@@ -229,8 +228,8 @@ def kmv_set_ops(
 
     Scale shape: step 1 is the ONLY pass over data (map-side dedup, k
     rows per set out); the sketches collapse to one k-longs array row
-    per set, persisted (``persist_intermediate``) so the pair grid never
-    re-reads the input. Steps 2-4 are pure JVM array expressions over
+    per set, persisted so the pair grid never re-reads the input.
+    Steps 2-4 are pure JVM array expressions over
     sets² pair rows, each O(k log k), independent of corpus size. The
     per-set array is bounded at k elements BEFORE collect_list (the rank
     window filters rn <= k), so no group ever materializes an unbounded
@@ -242,9 +241,8 @@ def kmv_set_ops(
         _kmv_sketch(df, set_col, key_col, k)
         .groupBy("g")
         .agg(F.array_sort(F.collect_list("h")).alias("hs"))
+        .persist()
     )
-    if persist_intermediate:
-        arrs = arrs.persist()
     pairs = arrs.select(F.col("g").alias("ga"), F.col("hs").alias("ha")).join(
         arrs.select(F.col("g").alias("gb"), F.col("hs").alias("hb")),
         F.col("ga") < F.col("gb"),

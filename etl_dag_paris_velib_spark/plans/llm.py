@@ -945,7 +945,8 @@ SELECT id AS doc_id, min(label) AS component FROM reach GROUP BY id
     "A~B, B~C must collapse {{A,B,C}} even when A~C was never emitted; "
     "keep-one-per-component is the correct survivor rule. Oracle computes "
     "the same components with a recursive CTE. Iterations bounded by "
-    "cluster diameter; large-star/small-star is the 100 TB upgrade.",
+    "cluster diameter; a graph deeper than the budget raises rather than "
+    "returning wrong labels.",
     tags=("dedup", "llm", "graph"),
 )
 def q42(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -279,9 +279,9 @@ SELECT src_id, dst_id, round(c, 6) AS containment FROM scored WHERE c >= 0.8
     "shingles on the source side keeps the ratio meaningful. Scale "
     "note: candidate volume is the co-occurrence pair count, so the "
     "sf1.0 replica (10x planted near-dup clusters) grows it ~100x by "
-    "construction — the dedup-stress regime (SCALING.md); the operator's "
-    "max_df hub guard is the valve for true boilerplate hubs, left off "
-    "here because pruning also lower-bounds the containment ratio.",
+    "construction — the dedup-stress regime (SCALING.md). The operator "
+    "has no hub (max_df) guard: pruning shingles would also lower-bound "
+    "the containment ratio.",
     tags=("dedup", "containment", "llm"),
 )
 def q93(spark: SparkSession, sf_dir: str) -> DataFrame:

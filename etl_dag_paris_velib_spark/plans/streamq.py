@@ -97,6 +97,10 @@ def _span_covering_delay(spark: SparkSession, sf_dir: str) -> str:
 
 _SPAN_CACHE: dict[str, str] = {}
 
+#: input bytes per state-store partition of the stateful streaming specs
+#: (see _stream_state_partitions)
+STREAM_STATE_TARGET_BYTES = 32 * 1024 * 1024
+
 
 def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     """State-store partition count for the stateful streaming specs,
@@ -116,18 +120,12 @@ def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     cluster's parallelism — at 100 TB the cap binds and this equals
     the old CPUS pinning (every core holds state), while a small input
     gets the few stores its state actually fills. ``target`` is
-    parameterized (SPARK_GRAFT_STREAM_STATE_TARGET_BYTES, default 32
-    MB — deliberately below the guide's 100 MB+ batch-shuffle range:
+    :data:`STREAM_STATE_TARGET_BYTES`, 32 MB — deliberately below the guide's 100 MB+ batch-shuffle range:
     state operators carry per-row store overhead batch shuffles do
     not). Changing the partition count never changes results — it is
     the same hash aggregation/join over a different partition count —
     and every stateful spec re-enters the driver's correctness window
     this round to prove it (plans/__init__.py window policy (c))."""
-    target = int(
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_STATE_TARGET_BYTES", str(32 * 1024 * 1024)
-        )
-    )
     path = os.path.join(sf_dir, "events.parquet")
     if os.path.isdir(path):
         size = sum(
@@ -138,7 +136,7 @@ def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     else:
         size = os.path.getsize(path)
     cap = spark.sparkContext.defaultParallelism
-    return max(1, min(cap, -(-size // target)))
+    return max(1, min(cap, -(-size // STREAM_STATE_TARGET_BYTES)))
 
 
 class _stream_shuffle_conf:

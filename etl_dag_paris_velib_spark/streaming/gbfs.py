@@ -91,17 +91,11 @@ def deduped_station_stream_bounded(
 def hourly_availability(
     deduped: DataFrame,
     window: str = "1 hour",
-    slide: str | None = None,
 ) -> DataFrame:
-    """Tumbling (or sliding, when ``slide`` is given) windowed availability:
-    per event-time window, stations reporting and bikes/docks available."""
-    win = (
-        F.window("last_reported", window)
-        if slide is None
-        else F.window("last_reported", window, slide)
-    )
+    """Tumbling windowed availability: per event-time window, stations
+    reporting and bikes/docks available."""
     return (
-        deduped.groupBy(win.alias("w"))
+        deduped.groupBy(F.window("last_reported", window).alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_reports"),
             F.approx_count_distinct("station_id").alias("n_stations"),
@@ -203,86 +197,6 @@ def bike_count_changes(deduped: DataFrame) -> DataFrame:
             stateStructType="last_ts long, last_bikes int",
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def bike_count_changes_v2(deduped: DataFrame) -> DataFrame:
-    """The same change-log compaction as :func:`bike_count_changes`, on
-    Spark 4's ``transformWithStateInPandas`` (the arbitrary-state API v2
-    that supersedes ``applyInPandasWithState``): a ``StatefulProcessor``
-    with a typed ``ValueState`` handle instead of a tuple-schema
-    GroupState. Differential-tested against the v1 operator — identical
-    output on the same input stream.
-
-    Why v2 at scale: state is addressed per named handle (value/list/map)
-    against the RocksDB state store, supports TTL eviction, timers, and
-    initial-state bootstrap — the pieces a 100 TB keyed-state operator
-    (billions of stations/users) actually needs; v1's single
-    pickled-tuple state has none of them.
-
-    Environment gate: the v2 runtime speaks protobuf between the Python
-    state worker and the JVM state server; this container ships no
-    ``google.protobuf``, so the differential test skips here (standard
-    clusters have it — pyspark declares it for exactly this API). It also
-    requires the RocksDB state-store provider, set below so any session
-    can run the returned plan.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    # required provider for transformWithState; runtime conf, applied at
-    # query start — set here so a vanilla session works (same
-    # self-sufficiency rule as sources/tpch.py:load_table)
-    deduped.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    class ChangeDetector(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState(
-                "last_report", "last_ts long, last_bikes int"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._last.exists():
-                last_ts, last = self._last.get()
-            else:
-                last_ts, last = None, None
-            out = []
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if chunks:
-                merged = pd.concat(chunks, ignore_index=True)
-                for row in merged.sort_values("last_reported").itertuples():
-                    ts = int(row.last_reported.timestamp())
-                    if last_ts is not None and ts <= last_ts:
-                        continue  # stale or duplicate event time
-                    cur = int(row.num_bikes_available)
-                    if last is None or cur != last:
-                        out.append((key[0], row.last_reported, last, cur))
-                    last_ts, last = ts, cur
-            self._last.update((last_ts, last))
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=["station_id", "changed_at", "prev_bikes", "num_bikes"],
-                )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        deduped.select("station_id", "last_reported", "num_bikes_available")
-        .groupBy("station_id")
-        .transformWithStateInPandas(
-            ChangeDetector(),
-            outputStructType=_CHANGES_DDL,
-            outputMode="Append",
-            timeMode="None",
         )
     )
 

@@ -22,7 +22,10 @@ used the same data schema:
 - a table that held data before its first write through this package never
   gets the file;
 - a write that writes nothing (``mode="ignore"`` or ``"error"`` onto an
-  existing path) leaves it alone.
+  existing path) leaves it alone;
+- of two writers that create the table at once, the second to finish keeps
+  the first one's file when the two data schemas are equal, and deletes it
+  when they differ.
 
 Nullability is relaxed before the schema is stored or compared, because Spark
 reads every parquet column as nullable. File access goes through
@@ -110,13 +113,19 @@ class _Table:
 
     def write_text(self, text: str) -> None:
         """Write the schema file whole: to a hidden name, then renamed, so a
-        reader never sees it half written. The rename refuses an existing
-        file, so of two writers creating the table at once one raises."""
+        reader never sees it half written.
+
+        The rename refuses an existing file. That happens when two writers
+        create the table at once and the other one renamed first: its file
+        stays when it holds our text, and otherwise the table has drifted,
+        so the file goes, as :meth:`SchemaUpkeep.before_write` would have
+        done had the writes run one after the other."""
         tmp = f"{self.root}/.{SCHEMA_FILE}.{uuid.uuid4().hex}"
         self.fs.write_bytes(tmp, text.encode("utf-8"))
         if not self.fs.rename(tmp, self.file):
             self.fs.delete(tmp, False)
-            raise IOError(f"could not rename {tmp} to {self.file}")
+            if self.read_text() != text:
+                self.fs.delete(self.file, False)
 
 
 def read_schema(spark: SparkSession, path: str) -> StructType | None:

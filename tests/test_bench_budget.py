@@ -52,8 +52,8 @@ def test_bench_sf001_within_budget():
 
 def test_bench_json_line_fits_driver_tail_window():
     """The external harness keeps only a bounded tail (observed: 2000
-    chars) of bench.py's output and parses the last line as JSON —
-    BENCH_r03 came back parsed:null when the per-query map outgrew that
+    chars) of bench.py's output and parses the last line as JSON — a
+    result came back unparsed when the per-query map outgrew that
     window. Rebuild the line exactly as bench.py prints it, from the
     full current registry, and require comfortable headroom."""
     sys.path.insert(0, ROOT)
@@ -70,7 +70,7 @@ def test_bench_json_line_fits_driver_tail_window():
     line = render_line(99999.999, short, 0.1, sorted(names[:5]))
     assert len(line) <= 1800, (
         f"bench JSON line is {len(line)} chars — the driver's ~2000-char "
-        "tail window will truncate it (BENCH_r03 failure mode)"
+        "tail window will truncate it and the line will not parse"
     )
     parsed = json.loads(line)
     assert parsed["metric"] == "suite_seconds" and parsed["queries"]

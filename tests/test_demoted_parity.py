@@ -2,7 +2,7 @@
 
 The external correctness harness walks ``queries()`` in insertion order
 with a ~50-query budget, so the queries in ``plans.DEMOTED`` (every one
-driver-green in a previous CORRECTNESS_r*.json) no longer receive a fresh
+driver-green in an earlier correctness run) no longer receive a fresh
 driver-checked row each round. This test preserves the same differential
 evidence locally: run each demoted query AT THE DRIVER'S OWN OPERATING
 POINT (sf=0.01 — a smaller sf could in principle miss value-canonical

@@ -15,6 +15,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from etl_dag_paris_velib_spark.cacheutil import clear_plan_caches
 from etl_dag_paris_velib_spark.functions.text import (
     minhash_signature_int,
     shingles,
@@ -230,11 +231,6 @@ def test_near_dup_components_transitive(spark):
         (10, 10), (11, 10),
         (20, 20), (21, 20), (22, 20),
     }
-    star = {
-        (r.doc_id, r.component)
-        for r in near_dup_components(pairs, method="star").collect()
-    }
-    assert star == got
 
 
 def test_components_multi_matches_per_graph_single(spark):
@@ -276,20 +272,20 @@ def test_components_multi_matches_per_graph_single(spark):
 
 def test_iterate_scan_partitions_sizing(monkeypatch):
     """The fixpoint's per-round scan partition count derives from edge
-    rows (r13): ceil(n/target), floor 1, env-tunable target — and no
-    upper clamp, because coalesce() can only shrink, so a huge edge
-    list keeps its existing partitioning untouched."""
+    rows (r13): ceil(n/target), floor 1 — and no upper clamp, because
+    coalesce() can only shrink, so a huge edge list keeps its existing
+    partitioning untouched."""
+    from etl_dag_paris_velib_spark.operators import dedup
     from etl_dag_paris_velib_spark.operators.dedup import (
         _iterate_scan_partitions,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_CC_ROWS_PER_PARTITION", raising=False)
     assert _iterate_scan_partitions(0) == 1  # empty graph still valid
     assert _iterate_scan_partitions(1) == 1
     assert _iterate_scan_partitions(1 << 20) == 1
     assert _iterate_scan_partitions((1 << 20) + 1) == 2
     assert _iterate_scan_partitions(10 * (1 << 20)) == 10
-    monkeypatch.setenv("SPARK_GRAFT_CC_ROWS_PER_PARTITION", "100")
+    monkeypatch.setattr(dedup, "CC_ROWS_PER_PARTITION", 100)
     assert _iterate_scan_partitions(250) == 3
 
 
@@ -297,6 +293,7 @@ def test_components_fixpoint_under_tiny_scan_partitions(spark, monkeypatch):
     """Components must be partition-count independent: force the sizing
     target down so the per-round scan runs MULTI-partition even on a
     toy graph, and the labels must not change."""
+    from etl_dag_paris_velib_spark.operators import dedup
     from etl_dag_paris_velib_spark.operators.dedup import (
         clear_cc_cache,
         near_dup_components,
@@ -306,7 +303,7 @@ def test_components_fixpoint_under_tiny_scan_partitions(spark, monkeypatch):
         [(1, 2), (2, 3), (10, 11), (21, 22), (20, 21)], ["id_a", "id_b"]
     )
     clear_cc_cache()  # the transitive test above caches this exact graph
-    monkeypatch.setenv("SPARK_GRAFT_CC_ROWS_PER_PARTITION", "2")
+    monkeypatch.setattr(dedup, "CC_ROWS_PER_PARTITION", 2)
     got = {
         (r.doc_id, r.component) for r in near_dup_components(pairs).collect()
     }
@@ -318,37 +315,23 @@ def test_components_fixpoint_under_tiny_scan_partitions(spark, monkeypatch):
     }
 
 
-def test_star_components_beat_label_on_chains(spark):
-    """Kiveris large/small-star converges in O(log²) rounds where label
-    propagation needs the diameter: a 64-node chain exhausts a 20-round
-    label budget but star finishes in <= 8, with identical components."""
+def test_components_on_a_chain_need_diameter_rounds(spark):
+    """Label propagation needs as many rounds as the longest shortest path
+    in a component: a 64-node chain exhausts a 20-round budget and raises,
+    naming the budget to raise, rather than return wrong labels; with a
+    budget above its diameter it converges to the chain's minimum."""
     from etl_dag_paris_velib_spark.operators.dedup import near_dup_components
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], ["id_a", "id_b"]
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(RuntimeError, match="raise max_iterations"):
         near_dup_components(chain, max_iterations=20).collect()
-    star = near_dup_components(chain, method="star", max_iterations=8)
-    assert {(r.doc_id, r.component) for r in star.collect()} == {
+    # 63 rounds carry label 0 to node 63; the 64th finds no change
+    got = near_dup_components(chain, max_iterations=64)
+    assert {(r.doc_id, r.component) for r in got.collect()} == {
         (i, 0) for i in range(64)
     }
-
-
-def test_star_components_match_label_on_real_pairs(spark):
-    """Differential on the q42 input: star and label methods must produce
-    the same component map over the sf0.001 planted near-dup pairs."""
-    from etl_dag_paris_velib_spark.operators.dedup import near_dup_components
-
-    pairs = minhash_lsh_pairs(_docs(spark), threshold=0.5).select("id_a", "id_b")
-    label = {
-        (r.doc_id, r.component) for r in near_dup_components(pairs).collect()
-    }
-    star = {
-        (r.doc_id, r.component)
-        for r in near_dup_components(pairs, method="star").collect()
-    }
-    assert star == label and label
 
 
 def test_exact_dedup_keeps_min_id(spark):
@@ -411,8 +394,9 @@ def test_operators_handle_empty_input(spark):
     )
     assert exact_dedup(empty).count() == 0
     assert bow_dedup(empty).count() == 0
-    assert minhash_lsh_pairs(empty, persist_intermediate=False).count() == 0
-    assert simhash_pairs(empty, persist_intermediate=False).count() == 0
+    assert minhash_lsh_pairs(empty).count() == 0
+    assert simhash_pairs(empty).count() == 0
+    clear_plan_caches(spark)
     assert edit_distance_pairs(empty).count() == 0
     import pytest as _pytest
 
@@ -614,140 +598,6 @@ def test_srp_quantized_codes_match_hof_reference(spark):
     got = {r["vec_id"]: list(r["c"]) for r in df.collect()}
     want = {r["vec_id"]: ref_codes(list(r["embedding"])) for r in rows}
     assert got == want
-
-
-# ---------------------------------------------------------------------------
-# prefix-filtered (AllPairs/PPJoin) exact Jaccard join
-# ---------------------------------------------------------------------------
-
-def test_prefix_filter_jaccard_is_exact(spark):
-    """The prefix-index path must return BIT-IDENTICAL pairs to the full
-    inverted index at the driver's sf0.01 operating point (the full path
-    is oracle-checked, so equality transfers the differential evidence),
-    and on planted near-dup pairs whose Jaccard straddles the threshold."""
-    from etl_dag_paris_velib_spark.operators.similarity import (
-        ngram_jaccard_pairs,
-    )
-    from tests.conftest import SF_ORACLE
-
-    docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
-    full = sorted(
-        map(
-            tuple,
-            ngram_jaccard_pairs(
-                docs, threshold=0.5, persist_intermediate=False
-            ).collect(),
-        )
-    )
-    pref = sorted(
-        map(
-            tuple,
-            ngram_jaccard_pairs(
-                docs,
-                threshold=0.5,
-                persist_intermediate=False,
-                prefix_filter=True,
-            ).collect(),
-        )
-    )
-    assert full == pref and len(full) > 0
-
-    # threshold-straddling planted pairs: 9/11 common -> J ~ 0.59 (in),
-    # 5/15 -> J = 0.25 (out); plus an identical pair (J = 1.0)
-    w = [f"tok{i:02d}" for i in range(30)]
-    docs2 = spark.createDataFrame(
-        [
-            (1, " ".join(w[0:12])),          # shingles over 12 words
-            (2, " ".join(w[0:10] + w[20:22])),
-            (3, " ".join(w[0:12])),           # == doc 1
-            (4, " ".join(w[15:27])),          # disjoint-ish
-        ],
-        "doc_id bigint, text string",
-    )
-    # include double-hostile thresholds: exact products like (2/3)*12 = 8
-    # or 0.55*20 = 11 sit ON an integer, where an un-epsiloned ceil can
-    # round up and drop a qualifying pair (ADVICE r05 finding)
-    for t in (0.3, 0.5, 0.9, 2 / 3, 0.55, 0.2):
-        f2 = sorted(
-            map(
-                tuple,
-                ngram_jaccard_pairs(
-                    docs2, threshold=t, persist_intermediate=False
-                ).collect(),
-            )
-        )
-        p2 = sorted(
-            map(
-                tuple,
-                ngram_jaccard_pairs(
-                    docs2,
-                    threshold=t,
-                    persist_intermediate=False,
-                    prefix_filter=True,
-                ).collect(),
-            )
-        )
-        assert f2 == p2, f"threshold {t}: prefix path diverged"
-        assert any(r[:2] == (1, 3) for r in f2)  # exact dup always found
-
-
-def test_prefix_filter_bounds_are_conservative_vs_exact_rational():
-    """Pure-arithmetic sweep of the epsiloned prune formulas against
-    exact Fraction arithmetic: for every (threshold, set size) the
-    epsiloned prefix bound must never EXCEED the exact ceil(t*n) (a
-    shorter prefix could drop a qualifying pair — the r05 ADVICE bug),
-    may undershoot by at most 1 (conservative = longer prefix = safe),
-    and the epsiloned length filter must keep every pair the exact
-    predicate keeps."""
-    import math
-    from fractions import Fraction
-
-    thresholds = [i / 100 for i in range(1, 100)] + [2 / 3, 1 / 3, 1 / 7, 0.55]
-    for t in thresholds:
-        ft = Fraction(t)  # the double's exact rational value
-        for n in range(1, 400):
-            exact_ceil = math.ceil(ft * n)
-            eps_ceil = math.ceil(t * n - 1e-9)
-            assert eps_ceil <= exact_ceil, (t, n, eps_ceil, exact_ceil)
-            assert eps_ceil >= exact_ceil - 1, (t, n, eps_ceil, exact_ceil)
-            for m in range(n, min(n + 50, 400)):  # m = max size, n = min
-                exact_keep = ft * m <= n
-                eps_keep = t * m <= n + 1e-9
-                if exact_keep:
-                    assert eps_keep, (t, n, m)
-
-
-def test_prefix_filter_indexes_fewer_tokens(spark):
-    """The scale claim behind prefix_filter: only |A| - ceil(t|A|) + 1
-    tokens per set enter the inverted index (~(1-t) of the full explode),
-    so the index self-join volume shrinks ~quadratically in (1-t)."""
-    from pyspark.sql import functions as F
-
-    from etl_dag_paris_velib_spark.functions.text import (
-        shingle_hashes60,
-        shingles,
-    )
-    from tests.conftest import SF_ORACLE
-
-    docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
-    hs = docs.select(shingle_hashes60(shingles(F.col("text"), 3)).alias("hs"))
-    t = 0.8
-    full_tokens, prefix_tokens = hs.select(
-        F.sum(F.size("hs")).alias("full"),
-        F.sum(
-            F.least(
-                F.size("hs"),
-                (
-                    F.size("hs")
-                    - F.ceil(F.lit(t) * F.size("hs"))
-                    + F.lit(1)
-                ).cast("int"),
-            )
-        ).alias("pref"),
-    ).first()
-    assert prefix_tokens < 0.35 * full_tokens, (
-        f"prefix index should be ~(1-t) of full: {prefix_tokens} vs {full_tokens}"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -957,7 +807,6 @@ def test_simhash_cache_rebuild_after_clear(spark):
     capture in _persist_udf_cache is what makes the rebuild safe, and
     this test pins that bench.py's flagged-query retime loop (clear +
     rerun) cannot die on q28."""
-    from etl_dag_paris_velib_spark.cacheutil import clear_plan_caches
     from etl_dag_paris_velib_spark.operators.similarity import simhash_pairs
     from tests.conftest import SF_SMOKE
 
@@ -988,8 +837,9 @@ def test_incremental_lsh_equals_filtered_full_recompute(spark):
 
     full = {
         (r.id_a, r.id_b): round(r.jaccard, 9)
-        for r in minhash_lsh_pairs(docs, persist_intermediate=False).collect()
+        for r in minhash_lsh_pairs(docs).collect()
     }
+    clear_plan_caches(spark)
     want = {
         p: j for p, j in full.items() if p[0] % 7 == 0 or p[1] % 7 == 0
     }

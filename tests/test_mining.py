@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from etl_dag_paris_velib_spark.cacheutil import clear_plan_caches
 from etl_dag_paris_velib_spark.operators.similarity import (
     all_pairs_nn,
     containment_pairs,
@@ -50,8 +51,9 @@ def test_containment_finds_doc_in_doc_that_jaccard_misses(spark):
     # the big page is NOT contained in its own excerpt
     assert (1, 2) not in got
     assert all(3 not in k for k in got)
-    jac = ngram_jaccard_pairs(docs, threshold=0.5, persist_intermediate=False)
-    assert not [r for r in jac.collect() if {r["id_a"], r["id_b"]} == {1, 2}]
+    jac = ngram_jaccard_pairs(docs, threshold=0.5).collect()
+    clear_plan_caches(spark)
+    assert not [r for r in jac if {r["id_a"], r["id_b"]} == {1, 2}]
 
 
 def test_containment_min_shingles_guard(spark):

@@ -197,8 +197,8 @@ def test_no_oracle_emits_hugeint():
     DuckDB's sum() over INTEGER/BIGINT widens to HUGEINT; a harness that
     fetches oracle results through pandas coerces HUGEINT to float64, so
     an integer-valued column renders "1.0" against Spark's "1" and the
-    value hash diverges even though the data is identical (this was the
-    CORRECTNESS_r03 q43 mismatch). Cast such aggregates ::BIGINT in the
+    value hash diverges even though the data is identical (q43 once
+    failed the driver's correctness check this way). Cast such aggregates ::BIGINT in the
     oracle SQL.
     """
     import duckdb

@@ -11,6 +11,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from etl_dag_paris_velib_spark.cacheutil import clear_plan_caches
 from etl_dag_paris_velib_spark.operators.dedup import keep_first
 from etl_dag_paris_velib_spark.schemas import VELIB_ENVELOPE_SCHEMA
 from etl_dag_paris_velib_spark.sources.readers import read_json
@@ -218,7 +219,8 @@ def test_kmv_set_ops_exact_when_union_under_k(spark, pair):
         rows.append(("a", "only"))
         sa = {"only"}
     df = spark.createDataFrame(rows, "g string, k string")
-    got = kmv_set_ops(df, "g", "k", k=64, persist_intermediate=False).collect()
+    got = kmv_set_ops(df, "g", "k", k=64).collect()
+    clear_plan_caches(spark)
     assert len(got) == 1
     r = got[0]
     sa2 = {f"v{x}" for x in sa} if sa != {"only"} else sa

@@ -125,31 +125,6 @@ def test_bike_count_changes_stateful(spark, bronze_dir):
     assert (chg.station_id, chg.prev_bikes, chg.num_bikes) == (19179944124, 0, 7)
 
 
-def test_bike_count_changes_v2_matches_v1(spark, bronze_dir):
-    """transformWithStateInPandas (arbitrary-state v2) must emit exactly
-    the rows the applyInPandasWithState operator does, across micro-batch
-    boundaries (maxFilesPerTrigger=1 forces state carry-over). Skips where
-    google.protobuf is absent — the v2 state protocol needs it and this
-    container doesn't ship it (real clusters do)."""
-    pytest.importorskip("google.protobuf")
-    from etl_dag_paris_velib_spark.streaming.gbfs import bike_count_changes_v2
-
-    stream = read_station_status_stream(spark, bronze_dir, max_files_per_trigger=1)
-    flat = flatten_station_status(stream)
-    run_available_now(bike_count_changes_v2(flat), "changes_v2_out", output_mode="append")
-    v2 = {tuple(r) for r in spark.table("changes_v2_out").collect()}
-
-    stream1 = read_station_status_stream(spark, bronze_dir, max_files_per_trigger=1)
-    run_available_now(
-        bike_count_changes(flatten_station_status(stream1)),
-        "changes_v1_out",
-        output_mode="append",
-    )
-    v1 = {tuple(r) for r in spark.table("changes_v1_out").collect()}
-    assert v2 == v1
-    assert len(v2) == 4
-
-
 def test_checkpoint_resume_exactly_once(spark, tmp_path, fixtures_dir):
     """Dedup state survives a query restart via the checkpoint: a duplicate
     arriving AFTER the restart is still dropped, and re-running never

@@ -20,7 +20,7 @@ from etl_dag_paris_velib_spark.sinks.writers import (
 )
 from etl_dag_paris_velib_spark.sources.fetcher import FileFetcher
 from etl_dag_paris_velib_spark.sources.readers import read_parquet
-from etl_dag_paris_velib_spark.table_schema import SCHEMA_FILE
+from etl_dag_paris_velib_spark.table_schema import SCHEMA_FILE, SchemaUpkeep
 
 RUN_TS = datetime(2025, 1, 31, 22, tzinfo=timezone.utc)
 TABLES = ("station_status", "weather")
@@ -148,3 +148,36 @@ def test_compaction_keeps_file_and_reads(spark, tmp_path):
     assert got.schema == want.schema
     assert rows(got) == rows(want)
     assert len(rows(got)) == 12
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+@pytest.mark.parametrize("same_schema", [True, False])
+def test_concurrent_first_writes(spark, tmp_path, scheme, same_schema):
+    """Two writers create one table at once: both read the fresh path
+    before either writes, so both create the schema file. The second
+    rename keeps the first file when the schemas are equal and removes it
+    when they differ, and neither raises or leaves a temporary file."""
+    local = str(tmp_path / "t")
+    path = scheme + local
+    frames = [_frame(spark, 0), _frame(spark, 1) if same_schema else _frame(spark, 1, "w")]
+    upkeeps = [SchemaUpkeep(spark, path, ("pt",), mode="append") for _ in frames]
+    for upkeep, df in zip(upkeeps, frames):
+        upkeep.before_write(df.schema)
+        df.write.partitionBy("pt").mode("append").parquet(path)
+    for upkeep in upkeeps:
+        upkeep.after_write()
+    temporary = [
+        n
+        for n in os.listdir(local)
+        if n.lstrip(".").startswith(SCHEMA_FILE + ".") and n != f".{SCHEMA_FILE}.crc"
+    ]
+    assert temporary == []
+    sidecar = os.path.join(local, SCHEMA_FILE)
+    if same_schema:
+        assert open(sidecar).read() == upkeeps[0].text == upkeeps[1].text
+        assert jobs_run_by(spark, lambda: read_parquet(spark, path)) == 0
+    else:
+        assert not os.path.exists(sidecar)
+    got, want = read_parquet(spark, path), spark.read.parquet(path)
+    assert got.schema == want.schema
+    assert rows(got) == rows(want)

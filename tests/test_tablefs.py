@@ -47,13 +47,22 @@ def test_scheme_alone_picks_the_implementation(spark, monkeypatch, path, scheme)
 
 
 def test_schema_file_rename_never_replaces_existing_file(spark, tmp_path, named):
+    """A refused rename keeps the existing file when it holds the same text
+    and deletes it when it does not; the other text never lands in it, and
+    no temporary file stays."""
+
+    def schema_files():
+        return [n for n in os.listdir(tmp_path) if SCHEMA_FILE in n and not n.endswith(".crc")]
+
     table = _Table(spark, named())
     table.write_text("first")
-    with pytest.raises(IOError):
-        table.write_text("second")
+    table.write_text("first")
     with open(tmp_path / SCHEMA_FILE) as f:
         assert f.read() == "first"
-    assert [n for n in os.listdir(tmp_path) if SCHEMA_FILE in n and not n.endswith(".crc")] == [SCHEMA_FILE]
+    assert schema_files() == [SCHEMA_FILE]
+    table.write_text("second")
+    assert schema_files() == []
+    assert table.read_text() is None
 
 
 def test_rename_delete_and_listing_agree(spark, tmp_path, named):
